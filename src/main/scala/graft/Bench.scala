@@ -1,9 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     // Bench hygiene (round 13): capture the 1-minute load average AT
     // ENTRY — before Spark's own threads dominate it — and record it in
@@ -51,14 +49,7 @@ object Bench {
         "itself proceeds and the stdout JSON carries the loadavg")
     }
     val sidecarOk = !hotBox || sys.env.get("SPARK_GRAFT_BENCH_ALLOW_HOT").contains("1")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     // Force the query's OWN physical plan: `df.count()` builds a new
     // Aggregate(count) logical plan and re-optimizes it, letting Catalyst
     // prune every computed projection, eliminate the output sort, and

@@ -100,19 +100,11 @@ object RelScale {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val base = args.lift(1).getOrElse("/tmp/graft_rel_scale")
     val mults = args.lift(2).map(_.split(",").map(_.toInt).toSeq).getOrElse(Seq(1, 10))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // a cluster raises shuffle parallelism with data; the 100×-tier
     // partition-scaling measurement (SCALING.md) sets this to 128 to
     // price exactly that, instead of arguing from the 32-fixed default
-    val shufP = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufP)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val shufP = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", GraftSession.cpus)
+    val spark = GraftSession(shufP)
 
     def dirFor(m: Int): String = if (m == 1) src else s"$base/x$m"
     mults.filter(_ > 1).foreach(m => gen(spark, src, dirFor(m), m))

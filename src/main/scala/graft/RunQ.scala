@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: run one declared query with timing, optionally printing the
   * formatted physical plan — the `.explain("formatted")` audit loop
   * (SURVEY.md: iterate until the plan is the one you'd want).
@@ -12,15 +10,7 @@ object RunQ {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     if (args.contains("explain"))
       SparkEntry.queries(name)(spark, sfDir).explain("formatted")
     // warm run excluded? No: single timed run, matches Bench methodology:

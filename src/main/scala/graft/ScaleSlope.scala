@@ -215,14 +215,7 @@ object ScaleSlope {
   def main(args: Array[String]): Unit = {
     val base = args.headOption.getOrElse("/tmp/graft_scale")
     val mults = args.lift(1).map(_.split(",").map(_.toInt).toSeq).getOrElse(Seq(1, 10))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     for (m <- mults) {
       val dir = s"$base/x$m"

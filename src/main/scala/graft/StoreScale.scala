@@ -44,14 +44,7 @@ object StoreScale {
 
   def main(args: Array[String]): Unit = {
     val base = args.headOption.getOrElse("/tmp/graft_storescale")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     val batchDocs = 5000L
     val nBatches = 10

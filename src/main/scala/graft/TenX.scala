@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Assemble the full-suite 10× fixture dir (SCALING.md "Full-suite 10×
   * pass"): star-schema tables from RelScale's key-shifted copies (same
   * selectivity/skew, no cross-copy matches) + documents/embeddings from
@@ -16,15 +14,7 @@ object TenX {
   def main(args: Array[String]): Unit = {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val dst = args.lift(1).getOrElse("/tmp/graft_10x")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     RelScale.gen(spark, src, dst, 10)
     def fresh(name: String): Boolean =
       !new java.io.File(s"$dst/$name.parquet/_SUCCESS").exists()

@@ -15,17 +15,18 @@ object Maintenance {
     * open/footer overhead dominates scans; clustering by the common
     * filter key also tightens min/max row-group statistics so later
     * scans prune better).
-    */
-  /** `codec`: parquet compression for the compacted files — compaction
+    *
+    * `codec`: parquet compression for the compacted files — compaction
     * is the natural place to trade write CPU for storage (e.g. land
     * streaming appends as snappy, compact to zstd: ~25-40% smaller on
     * text at 100-TB scale, one-time cost).
-    */
-  /** `partitionCols`: hive-partition columns to PRESERVE through the
+    *
+    * `partitionCols`: hive-partition columns to PRESERVE through the
     * compaction (e.g. a streaming store's batch_id) — omitting them
     * would demote the partition column to a data column and the next
     * partitioned append to the same dataset would produce a conflicting
-    * directory layout.
+    * directory layout. (A `batch_id` store compacts IN PLACE through
+    * [[graft.streaming.BatchStore.compact]].)
     */
   def compactParquet(spark: SparkSession, inDir: String, outDir: String,
       keys: Seq[String], targetFiles: Int, codec: String = "zstd",
@@ -37,123 +38,6 @@ object Maintenance {
       .option("compression", codec)
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
       .parquet(outDir)
-  }
-
-  /** IN-PLACE small-file compaction for a `batch_id=N`-partitioned
-    * streaming store (round 15 — the snapshot-side stores accumulate
-    * one partition per micro-batch forever, task-count files each, so
-    * snapshots open O(batches × tasks) files): every batch partition
-    * is rewritten as ONE zstd file sorted on `keys` (tight row-group
-    * stats for the snapshot's joins), the batch_id layout preserved so
-    * a replayed batch still dynamic-overwrites exactly its own
-    * partition with identical rows (replay stays a no-op,
-    * MaintenanceSpec). Publish is stage-then-swap with the
-    * [[graft.streaming.TieredStore]] `__prev` discipline: recovery
-    * first, then rename the committed store aside, publish the staged
-    * rewrite, delete the remnant — a crash anywhere leaves either the
-    * committed store or its recoverable `__prev`
-    * ([[readBatchStoreOr]] resolves both), correct under POSIX and
-    * HDFS rename semantics (each attempt stages a complete tree under
-    * a fresh `__tmp`). Offline step: run it between micro-batches /
-    * snapshots, not concurrently with a commit. A deployment whose
-    * single batches outgrow one file would range-split within the
-    * batch partition; the problem this solves is the opposite
-    * (many tiny per-batch files). Returns false for an absent store.
-    */
-  /** Recover a batch store from a [[compactBatchStore]] crash window.
-    * A missing committed dir restores the surviving `__prev` wholesale.
-    * When BOTH exist — a WRITER re-created the store dir after a
-    * mid-publish crash (writers land fresh batches without resolving
-    * `__prev`) — batch partitions are the unit of truth: every `__prev`
-    * batch dir absent from the committed dir is moved in, then `__prev`
-    * is dropped. A batch id present in both keeps the committed copy —
-    * replay recomputes identical partition content, so the two copies
-    * agree. Idempotent: a crash mid-merge leaves a smaller `__prev`
-    * that the next recovery (or [[readBatchStoreOr]]'s union) resolves
-    * the same way. Called by [[compactBatchStore]] and by every batch
-    * writer ([[graft.streaming.StreamingDedup.writeBatchPartition]]) —
-    * without the writer-side call, the first post-crash commit would
-    * mask `__prev` behind a one-batch store and the next recovery
-    * would delete the only copy of history.
-    */
-  def recoverBatchStore(spark: SparkSession, dir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(dir)
-    val prev = new Path(dir + "__prev")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(prev)) return
-    if (!fs.exists(p)) {
-      require(fs.rename(prev, p),
-        s"batch-store recovery could not restore $prev")
-      return
-    }
-    fs.listStatus(prev).foreach { st =>
-      val name = st.getPath.getName
-      if (name.startsWith("batch_id=") && !fs.exists(new Path(p, name)))
-        require(fs.rename(st.getPath, new Path(p, name)),
-          s"batch-store recovery could not merge ${st.getPath}")
-    }
-    fs.delete(prev, true)
-    ()
-  }
-
-  def compactBatchStore(spark: SparkSession, dir: String,
-      keys: Seq[String]): Boolean = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(dir)
-    val prev = new Path(dir + "__prev")
-    val tmp = new Path(dir + "__tmp")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    recoverBatchStore(spark, dir) // crash recovery first
-    val df =
-      try spark.read.parquet(dir)
-      catch { case _: org.apache.spark.sql.AnalysisException => return false }
-    fs.delete(tmp, true) // stale staging from an earlier failed run
-    df.repartition(col("batch_id")) // whole batches per task → 1 file/batch
-      .sortWithinPartitions((col("batch_id") +: keys.map(col)): _*)
-      .write.mode(SaveMode.Overwrite)
-      .option("compression", "zstd")
-      .partitionBy("batch_id").parquet(tmp.toString)
-    require(fs.rename(p, prev),
-      s"batch-store compaction could not stage the previous store aside: $p")
-    require(fs.rename(tmp, p), s"batch-store compaction could not publish $tmp")
-    fs.delete(prev, true)
-    true
-  }
-
-  /** Read a batch-partitioned store, resolving every
-    * [[compactBatchStore]] crash window — None only when nothing
-    * exists. Committed dir missing → read the surviving `__prev`.
-    * BOTH present (a post-crash writer, or a crash mid
-    * [[recoverBatchStore]] merge) → union the `__prev` batch
-    * partitions the committed dir lacks, so no window serves a
-    * truncated history silently. One `exists` probe on the hot path;
-    * the union machinery only engages while an unrecovered `__prev`
-    * lingers.
-    */
-  def readBatchStoreOr(spark: SparkSession, dir: String): Option[DataFrame] = {
-    import org.apache.hadoop.fs.Path
-    val committed =
-      try Some(spark.read.parquet(dir))
-      catch { case _: org.apache.spark.sql.AnalysisException => None }
-    val prev = new Path(dir + "__prev")
-    val fs = prev.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(prev)) committed
-    else committed match {
-      case None =>
-        try Some(spark.read.parquet(prev.toString))
-        catch { case _: org.apache.spark.sql.AnalysisException => None }
-      case Some(df) =>
-        val have = fs.listStatus(new Path(dir)).map(_.getPath.getName)
-          .filter(_.startsWith("batch_id=")).toSet
-        val missing = fs.listStatus(prev).map(_.getPath)
-          .filter(q => q.getName.startsWith("batch_id=") && !have(q.getName))
-        if (missing.isEmpty) committed
-        else Some(df.unionByName(
-          spark.read.option("basePath", prev.toString)
-            .parquet(missing.map(_.toString).toSeq: _*)
-            .select(df.columns.map(col).toSeq: _*)))
-    }
   }
 
   /** Compaction with two-dimensional Z-order clustering: rows are

@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
 /** Incremental CDC apply — q_cdc_apply's current-state materialization
@@ -9,17 +9,12 @@ import org.apache.spark.sql.types._
   * changelog arrives as a stream, each batch's rows land in a
   * batch_id-partitioned store, and the snapshot runs the IDENTICAL
   * last-writer-wins aggregation (queries.Versioning.cdcStateOf) over
-  * the accumulated rows — so the declared query reuses q_cdc_apply's
-  * DuckDB oracle verbatim, the q_substr_inc contract.
+  * the accumulated rows ([[IncrementalOperator]]).
   *
-  * Idempotence ladder (the StreamingDedup conventions):
-  *  - same-batchId replay: dynamic partition overwrite rewrites exactly
-  *    this batch's partition with byte-identical recomputed rows.
-  *  - cross-batch redelivery (an at-least-once source re-sending an
-  *    event under a NEW batch id): deduped on the changelog's own
-  *    event_id at snapshot. The max_by state is redelivery-proof by
-  *    itself (a re-seen last writer wins identically); the n_ops COUNT
-  *    is not — the dedup is what keeps it exact.
+  * Redelivery is deduped on the changelog's own event_id. The max_by
+  * state is redelivery-proof by itself (a re-seen last writer wins
+  * identically); the n_ops COUNT is not — the dedup is what keeps it
+  * exact.
   *
   * Scale shape: per-batch work is one projection of the batch (no
   * shuffle at commit); the snapshot aggregation is partially
@@ -28,77 +23,21 @@ import org.apache.spark.sql.types._
   * deployment compacts old batches into per-key partials with the same
   * aggregation — the merge is associative by construction.
   */
-object IncrementalCdc {
+object IncrementalCdc extends IncrementalOperator(
+    StructType(Seq(
+      StructField("user_id", LongType),
+      StructField("event_id", LongType),
+      StructField("ts", TimestampType),
+      StructField("event_type", StringType),
+      StructField("value", DoubleType))),
+    dedupKeys = Seq("event_id"), sortKeys = Seq("user_id", "event_id")) {
 
-  val RowSchema: StructType = StructType(Seq(
-    StructField("user_id", LongType),
-    StructField("event_id", LongType),
-    StructField("ts", TimestampType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType)))
+  protected def rowsOf(batch: DataFrame): DataFrame =
+    batch.select(rowSchema.fieldNames.map(col).toSeq: _*)
 
-  /** Idempotent micro-batch commit: land the batch's changelog rows as
-    * this batch's partition.
-    */
-  def commitBatch(batch: DataFrame, batchId: Long, storeDir: String): Unit = {
-    val rows = batch
-      .select(RowSchema.fieldNames.map(col).toSeq: _*)
-      // cut the streaming-source lineage before the write (the
-      // StreamingDedup convention)
-      .localCheckpoint(true)
-    StreamingDedup.writeBatchPartition(rows, batchId, storeDir)
-  }
+  protected def snapshotOf(rows: DataFrame): DataFrame =
+    graft.queries.Versioning.cdcStateOf(rows)
 
-  /** Accumulated changelog rows; absent store reads as zero rows. */
-  def readRows(spark: SparkSession, storeDir: String): DataFrame =
-    graft.sources.Maintenance.readBatchStoreOr(spark, storeDir)
-      .map(_.select(RowSchema.fieldNames.map(col).toSeq: _*)
-        .dropDuplicates(Seq("event_id")))
-      .getOrElse(
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], RowSchema))
-
-  /** Offline store maintenance: one user-sorted zstd file per batch
-    * partition ([[graft.sources.Maintenance.compactBatchStore]]);
-    * snapshot- and replay-preserving (MaintenanceSpec).
-    */
-  def maintain(spark: SparkSession, storeDir: String): Boolean =
-    graft.sources.Maintenance.compactBatchStore(spark, storeDir,
-      Seq("user_id", "event_id"))
-
-  /** Current state over everything ingested so far — identical
-    * (spec-proven) to cdcStateOf over the union of all batches.
-    */
-  def snapshot(spark: SparkSession, storeDir: String): DataFrame =
-    graft.queries.Versioning.cdcStateOf(readRows(spark, storeDir))
-
-  /** Declared-query body (q_cdc_inc): land the fixture events as
-    * `nFiles` parquet files, drain them as real micro-batches through
-    * foreachBatch, snapshot, clean up the temp state.
-    */
-  def fixtureRun(spark: SparkSession, sfDir: String, nFiles: Int = 3): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_inc_cdc")
-    try {
-      graft.Tables.events(spark, sfDir)
-        .select(RowSchema.fieldNames.map(col).toSeq: _*)
-        .repartition(nFiles).write.parquet(s"$tmp/in")
-      val schema = spark.read.parquet(s"$tmp/in").schema
-      val q = StreamingDedup.docsStream(spark, s"$tmp/in", schema)
-        .writeStream
-        .option("checkpointLocation", s"$tmp/ck")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          commitBatch(batch, batchId, s"$tmp/state")
-        }
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally q.stop()
-      snapshot(spark, s"$tmp/state").localCheckpoint(true)
-    } finally {
-      import scala.util.Try
-      val walk = java.nio.file.Files.walk(tmp)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => { Try(java.nio.file.Files.deleteIfExists(p)); () })
-      finally walk.close()
-    }
-  }
+  protected def input(spark: SparkSession, sfDir: String): DataFrame =
+    rowsOf(graft.Tables.events(spark, sfDir))
 }

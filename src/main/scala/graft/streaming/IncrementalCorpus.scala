@@ -34,7 +34,7 @@ import org.apache.spark.sql.functions._
   *  - '''split tags''': derived (md5 of doc_id), map-only at snapshot.
   *
   * Every per-batch write is keyed on the micro-batch id via dynamic
-  * partition overwrite ([[StreamingDedup.writeBatchPartition]]) and
+  * partition overwrite ([[BatchStore.land]]) and
   * every per-batch read is restricted to strictly-earlier batches, so
   * replaying a batch (foreachBatch is at-least-once) recomputes and
   * rewrites identical partitions — a no-op, same contract as
@@ -112,19 +112,14 @@ object IncrementalCorpus {
     TieredStore.stringKeyed(s"$base/hubs", Seq("digest", "hub"), "digest",
       HubBuckets, label = "hubs-store")
 
-  /** Batch-store read resolving the maintenance crash window (a
-    * [[graft.sources.Maintenance.compactBatchStore]] that died between
-    * its publish renames leaves the last good tree at `__prev`).
-    */
-  private def readOr(spark: SparkSession, dir: String): Option[DataFrame] =
-    graft.sources.Maintenance.readBatchStoreOr(spark, dir)
-
-  /** Batch-partitioned read restricted to batches strictly before
-    * `beforeBatch` (replay safety), minus the partition column.
+  /** Batch-store read ([[BatchStore.read]], `__prev`-aware) restricted
+    * to batches strictly before `beforeBatch` (replay safety), minus the
+    * partition column.
     */
   private def readBefore(spark: SparkSession, dir: String,
       beforeBatch: Long): Option[DataFrame] =
-    readOr(spark, dir).map(_.filter(col("batch_id") < beforeBatch).drop("batch_id"))
+    BatchStore.read(spark, dir)
+      .map(_.filter(col("batch_id") < beforeBatch).drop("batch_id"))
 
   /** Ingest one micro-batch (the foreachBatch body; idempotent under
     * replay). `threshold` is the near-dup dedup threshold, `minOverlap`
@@ -137,25 +132,6 @@ object IncrementalCorpus {
     * but never enlarge (ScaleSlope's fixedref tier uses this to price
     * the incremental machinery, not the growing-bench fixture).
     */
-  /** Phase-attribution hook (round 16, VERDICT item 3): with
-    * SPARK_GRAFT_INC_PROFILE=1, each [[ingestBatch]] phase prints its
-    * wall seconds to stderr so the per-batch budget can be NAMED
-    * instead of guessed. Off by default — a no-op closure, zero cost
-    * in the bench path.
-    */
-  private val profileOn: Boolean =
-    sys.env.get("SPARK_GRAFT_INC_PROFILE").contains("1")
-
-  private def profile[A](phase: String, batchId: Long)(body: => A): A =
-    if (!profileOn) body
-    else {
-      val t0 = System.nanoTime()
-      val out = body
-      System.err.println(
-        f"[inc-profile] batch=$batchId $phase%-14s ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      out
-    }
-
   def ingestBatch(batch: DataFrame, batchId: Long, base: String,
       threshold: Double = 0.5, minOverlap: Double = 0.3,
       benchMaxId: Long = Long.MaxValue,
@@ -163,33 +139,11 @@ object IncrementalCorpus {
     val spark = batch.sparkSession
     val hubStore = hubStoreOf(base)
     // State-layout compatibility guards, BEFORE any state mutation.
-    // Round 15: the healthy path is decided by FILESYSTEM existence
-    // probes (a legacy dir is one whose store DIRECTORY is absent) —
-    // the previous formulation set up several spark.read's of pure
-    // driver latency on EVERY micro-batch to answer a question one
-    // `exists` answers; the expensive spark-side probes now run only
-    // when the directory really is missing (the fail-fast path).
-    val gfs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    def dirPresent(p: String): Boolean =
-      gfs.exists(new org.apache.hadoop.fs.Path(p)) ||
-        gfs.exists(new org.apache.hadoop.fs.Path(p + "__prev"))
-    // "present" alone is too weak for the layout guards (round 16,
-    // ADVICE): a store dir that exists but holds no committed batch_id=
-    // children (partial crash debris, a manual restore) would silently
-    // pass the fail-fast guard whose whole purpose is preventing silent
-    // missed contamination/dedup. A dir only counts as healthy when a
-    // committed batch child is visible; otherwise the original
-    // spark-side readBefore probe decides (cheap — it only runs on the
-    // rare empty-dir case).
-    def hasCommittedBatch(p: String): Boolean = {
-      def childOk(dir: String): Boolean = {
-        val dp = new org.apache.hadoop.fs.Path(dir)
-        gfs.exists(dp) && gfs.listStatus(dp)
-          .exists(_.getPath.getName.startsWith("batch_id="))
-      }
-      childOk(p) || childOk(p + "__prev")
-    }
+    // The healthy path is decided by a filesystem listing (a store
+    // counts as present only when it, or its `__prev`, holds a landed
+    // batch — a bare dir may be crash debris or a manual restore); the
+    // spark-side legacy probes run only when it is missing (the
+    // fail-fast path).
     // a dir written before the benchsh/ store existed has earlier
     // bench/ batches but no benchsh/ directory — continuing would
     // silently screen new docs against only this batch's shingle
@@ -197,7 +151,7 @@ object IncrementalCorpus {
     // name the remedy. The bench/ probe only runs when benchsh/ is
     // absent (fresh dirs pass trivially; replay passes: the two are
     // written together).
-    if (!hasCommittedBatch(s"$base/benchsh")) {
+    if (!BatchStore.hasBatches(spark, s"$base/benchsh")) {
       val legacyBench = readBefore(spark, s"$base/bench", batchId)
       require(legacyBench.forall(_.isEmpty),
         s"$base: bench/ has batches before $batchId but benchsh/ is missing — " +
@@ -208,7 +162,8 @@ object IncrementalCorpus {
     // state dir would silently treat every batch digest as new (missed
     // cross-batch exact-dup edges, no error). Two-tier aware: a fully
     // compacted hubs store has no append-tier batches but is not legacy.
-    if (!hasCommittedBatch(s"$base/hubs") && !dirPresent(hubStore.bucketedDir)) {
+    if (!BatchStore.hasBatches(spark, s"$base/hubs") &&
+        hubStore.watermark(spark) < 0) {
       val legacyRaw = readBefore(spark, s"$base/raw", batchId)
       require(legacyRaw.forall(_.isEmpty),
         s"$base: raw/ has batches before $batchId but hubs/ is missing — " +
@@ -217,19 +172,18 @@ object IncrementalCorpus {
     }
     // one materialization of the arriving docs: feeds the bench split,
     // the quality gate, and (via commitBatch) signature generation
-    val b = profile("batch_ckpt", batchId)(batch.localCheckpoint(true))
+    val b = batch.localCheckpoint(true)
     val benchDelta = b.filter(col("doc_id") % 10 === 0 &&
         col("doc_id") < benchMaxId)
       .select(col("doc_id"), col("text"))
-    val q = profile("quality_ckpt", batchId)(CorpusPipeline.qualityFilter(b)
+    val q = CorpusPipeline.qualityFilter(b)
       .withColumn("digest", sha2(lower(trim(col("text"))), 256))
-      .localCheckpoint(true))
+      .localCheckpoint(true)
 
     // near-dup candidate pairs + band store, batch-keyed (train-once
     // signatures; the band join prunes to buckets the batch touches)
-    profile("near_dedup", batchId)(
-      StreamingDedup.commitBatch(q.drop("digest"), batchId,
-        s"$base/store", s"$base/pairs", threshold, compactEvery = compactEvery))
+    StreamingDedup.commitBatch(q.drop("digest"), batchId,
+      s"$base/store", s"$base/pairs", threshold, compactEvery = compactEvery)
 
     // exact-dup connectivity: one star edge per new doc sharing a digest
     // with an earlier doc or with a batch-mate — linear, ids only.
@@ -253,9 +207,8 @@ object IncrementalCorpus {
     // materialized ONCE: the batch's (digest → min doc_id) rows feed
     // the pruned read's probe, the hub lookup join, and the delta —
     // bounded by the batch's own distinct-digest count
-    val bmin = profile("hub_bmin", batchId)(
-      q.groupBy("digest").agg(min(col("doc_id")).as("bmin"))
-        .localCheckpoint(true))
+    val bmin = q.groupBy("digest").agg(min(col("doc_id")).as("bmin"))
+      .localCheckpoint(true)
     // hubs delta = digests this batch INTRODUCES, hubbed at their
     // batch minimum — replay-idempotent like every other per-batch
     // write. batchHubs (the restricted earlier-hub rows the pruned
@@ -263,7 +216,7 @@ object IncrementalCorpus {
     // the delta anti-join read it; the result is bounded by the
     // batch's own digest count. The first batch (no hubs yet) skips
     // the whole lookup machinery: every digest is new.
-    val (withHub, hubsDelta) = profile("hub_lookup", batchId)(
+    val (withHub, hubsDelta) =
       hubStore.readPruned(spark, batchId, bmin.select(col("digest"))) match {
         case None =>
           (q.select(col("doc_id"), col("digest")).join(bmin, "digest")
@@ -278,17 +231,14 @@ object IncrementalCorpus {
             bmin.select(col("digest"), col("bmin").as("hub"))
               .join(broadcast(batchHubs.select(col("digest"))),
                 Seq("digest"), "left_anti"))
-      })
+      }
     val dedges = withHub.filter(col("doc_id") =!= col("hub"))
       .select(col("hub").as("src"), col("doc_id").as("dst"))
-    profile("hub_dedges", batchId)(
-      StreamingDedup.writeBatchPartition(dedges, batchId, s"$base/dedges"))
+    BatchStore.land(dedges, batchId, s"$base/dedges")
     // digest-sorted append + the same automatic compaction cadence as
     // the band store — post-commit, replay- and crash-safe
-    profile("hub_append", batchId) {
-      hubStore.append(hubsDelta, batchId)
-      if (compactEvery > 0) hubStore.maybeCompact(spark, compactEvery)
-    }
+    hubStore.append(hubsDelta, batchId)
+    if (compactEvery > 0) hubStore.maybeCompact(spark, compactEvery)
 
     // contamination: new docs vs all benchmark docs so far, and already-
     // ingested docs vs the batch's new benchmark docs — each a bounded
@@ -313,20 +263,17 @@ object IncrementalCorpus {
     // (raw/ is read ONLY on this rare new-bench-docs path since round 14
     // — the per-batch exact-dup lookup reads hubs/ instead.)
     val rawOld = readBefore(spark, s"$base/raw", batchId)
-    val oldVsNew = profile("rescreen_probe", batchId)(rawOld match {
+    val oldVsNew = rawOld match {
       case Some(old) if !benchDelta.isEmpty =>
         Corpus.decontamAgainst(old.drop("digest"), benchDelta, minOverlap)
           .select(col("doc_id"))
       case _ => newVsAll.limit(0)
-    })
-    val flags = newVsAll.unionByName(oldVsNew).distinct()
-    profile("decontam", batchId)(
-      StreamingDedup.writeBatchPartition(flags, batchId, s"$base/flags"))
-    profile("state_writes", batchId) {
-      StreamingDedup.writeBatchPartition(benchDelta, batchId, s"$base/bench")
-      StreamingDedup.writeBatchPartition(benchShDelta, batchId, s"$base/benchsh")
-      StreamingDedup.writeBatchPartition(q, batchId, s"$base/raw")
     }
+    val flags = newVsAll.unionByName(oldVsNew).distinct()
+    BatchStore.land(flags, batchId, s"$base/flags")
+    BatchStore.land(benchDelta, batchId, s"$base/bench")
+    BatchStore.land(benchShDelta, batchId, s"$base/benchsh")
+    BatchStore.land(q, batchId, s"$base/raw")
   }
 
   /** The current train-ready corpus: connected components over the
@@ -336,21 +283,21 @@ object IncrementalCorpus {
     * `CorpusPipeline.buildFrame` over everything ingested so far.
     */
   def snapshot(spark: SparkSession, base: String): DataFrame = {
-    val raw = readOr(spark, s"$base/raw")
+    val raw = BatchStore.read(spark, s"$base/raw")
       .getOrElse(throw new IllegalStateException(
         s"$base/raw: no ingested state to snapshot"))
       .drop("batch_id", "digest")
     val pairs = StreamingDedup.readPairs(spark, s"$base/pairs")
       .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-    val dedges = readOr(spark, s"$base/dedges")
+    val dedges = BatchStore.read(spark, s"$base/dedges")
       .map(_.select(col("src"), col("dst"))).getOrElse(pairs.limit(0))
     val drop = graft.ml.StarComponents
       .connectedComponents(pairs.unionByName(dedges), validate = false)
       .filter(col("id") =!= col("comp"))
       .select(col("id").as("doc_id"))
-    val benchIds = readOr(spark, s"$base/bench")
+    val benchIds = BatchStore.read(spark, s"$base/bench")
       .map(_.select(col("doc_id"))).getOrElse(drop.limit(0))
-    val flagged = readOr(spark, s"$base/flags")
+    val flagged = BatchStore.read(spark, s"$base/flags")
       .map(_.select(col("doc_id"))).getOrElse(drop.limit(0))
     CorpusPipeline.withSplit(
       raw.join(drop, Seq("doc_id"), "left_anti")
@@ -360,7 +307,7 @@ object IncrementalCorpus {
 
   /** Offline state maintenance (round 15): compact every snapshot-side
     * batch-partitioned store to one sorted zstd file per batch
-    * ([[graft.sources.Maintenance.compactBatchStore]] — they otherwise
+    * ([[BatchStore.compact]] — they otherwise
     * accumulate task-count files per micro-batch forever, and a
     * snapshot opens O(batches × tasks) of them), and fold the two
     * TieredStores' landed append batches into their bucketed tiers.
@@ -373,7 +320,7 @@ object IncrementalCorpus {
     Seq("pairs" -> "doc_a", "dedges" -> "src", "flags" -> "doc_id",
       "bench" -> "doc_id", "benchsh" -> "shingle", "raw" -> "doc_id")
       .foreach { case (d, key) =>
-        graft.sources.Maintenance.compactBatchStore(spark, s"$base/$d", Seq(key))
+        BatchStore.compact(spark, s"$base/$d", Seq(key))
       }
     // above-watermark only: replayed compacted batches leave garbage
     // append dirs below it (invisible to reads, but an upTo below the
@@ -390,32 +337,17 @@ object IncrementalCorpus {
 
   /** Self-contained fixture run (the q_corpus_inc query surface): land
     * the documents table as a multi-file dir, stream it through
-    * [[ingestBatch]] batch by batch via foreachBatch, return the final
-    * [[snapshot]]. The temp state is deleted after localCheckpointing
-    * the result, as in [[StreamingDedup.nearDedupFixtureRun]].
+    * [[ingestBatch]] batch by batch ([[StreamFixture.run]]), return the
+    * final [[snapshot]].
     */
   def fixtureRun(spark: SparkSession, sfDir: String, nFiles: Int = 2,
-      benchMaxId: Long = Long.MaxValue): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_inc_corpus")
-    graft.Tables.documents(spark, sfDir)
-      .repartition(nFiles).write.parquet(s"$tmp/in")
-    val schema = spark.read.parquet(s"$tmp/in").schema
-    val q = StreamingDedup.docsStream(spark, s"$tmp/in", schema)
-      .writeStream
-      .option("checkpointLocation", s"$tmp/ck")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatch(batch, batchId, s"$tmp/state", benchMaxId = benchMaxId)
-      }
-      .start()
-    profile("stream_total", -1L) { q.processAllAvailable() }
-    q.stop()
-    val out = profile("snapshot", -1L)(snapshot(spark, s"$tmp/state")
-      .select(col("doc_id"), col("lang"), col("split"))
-      .orderBy(col("doc_id"))
-      .localCheckpoint(true))
-    import scala.util.Try
-    java.nio.file.Files.walk(tmp).sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => { Try(java.nio.file.Files.deleteIfExists(p)); () })
-    out
-  }
+      benchMaxId: Long = Long.MaxValue): DataFrame =
+    StreamFixture.run(graft.Tables.documents(spark, sfDir), nFiles) {
+      (batch, batchId, state) =>
+        ingestBatch(batch, batchId, state, benchMaxId = benchMaxId)
+    } { state =>
+      snapshot(spark, state)
+        .select(col("doc_id"), col("lang"), col("split"))
+        .orderBy(col("doc_id"))
+    }
 }

@@ -237,28 +237,11 @@ object StreamingDedup {
     */
   def readPairs(spark: SparkSession, pairsDir: String): DataFrame =
     // __prev-aware: the pairs store is batch-compactable offline
-    // (Maintenance.compactBatchStore / IncrementalCorpus.maintain)
-    graft.sources.Maintenance.readBatchStoreOr(spark, pairsDir)
+    // (BatchStore.compact via IncrementalCorpus.maintain)
+    BatchStore.read(spark, pairsDir)
       .map(_.select(PairsSchema.fieldNames.map(col).toSeq: _*))
       .getOrElse(
         spark.createDataFrame(spark.sparkContext.emptyRDD[Row], PairsSchema))
-
-  /** Land `df` as the `batch_id=batchId` partition of `dir`. Dynamic
-    * partition overwrite is the idempotence mechanism: a replay rewrites
-    * ONLY its own partition with the identical recomputed rows and never
-    * touches other batches' output. Recovery-first (round 15): a
-    * maintenance compaction that crashed mid-publish leaves the only
-    * copy of history at `dir__prev` — writing WITHOUT merging it back
-    * would mask it behind a fresh one-batch store and the next recovery
-    * would discard it. One `exists` probe per commit on the clean path.
-    */
-  private[streaming] def writeBatchPartition(df: DataFrame, batchId: Long, dir: String): Unit = {
-    graft.sources.Maintenance.recoverBatchStore(df.sparkSession, dir)
-    df.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(dir)
-  }
 
   /** The full idempotent micro-batch commit (the foreachBatch body,
     * exposed so tests can replay it): read the earlier-batch store,
@@ -269,19 +252,6 @@ object StreamingDedup {
     * safe under replay and crash (see there); 0 leaves compaction to
     * the operator ([[compactStore]]).
     */
-  private val profileOn: Boolean =
-    sys.env.get("SPARK_GRAFT_INC_PROFILE").contains("1")
-
-  private def profile[A](phase: String, batchId: Long)(body: => A): A =
-    if (!profileOn) body
-    else {
-      val t0 = System.nanoTime()
-      val out = body
-      System.err.println(
-        f"[sd-profile] batch=$batchId $phase%-12s ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      out
-    }
-
   def commitBatch(batch: DataFrame, batchId: Long, storeDir: String,
       pairsDir: String, threshold: Double, prune: Boolean = true,
       compactEvery: Int = 0): Unit = {
@@ -290,23 +260,18 @@ object StreamingDedup {
     // band rows feed the touched-hash collect, the pair join, AND the
     // store write — cut the streaming-source lineage and materialize
     // ONCE (signatures are the batch's expensive map-only work)
-    val bands = profile("sign", batchId)(
-      Similarity.bandedSignaturesOf(batch).localCheckpoint(true))
-    val store = profile("store_read", batchId)(
+    val bands = Similarity.bandedSignaturesOf(batch).localCheckpoint(true)
+    val store =
       if (prune) bandStore.readPruned(spark, batchId, bands)
-      else bandStore.readAll(spark, batchId))
+      else bandStore.readAll(spark, batchId)
     val (pairs, cappedBoundary) = pairsFromBands(bands, store, threshold)
-    profile("pairs", batchId) {
-      writeBatchPartition(pairs, batchId, pairsDir)
-      cappedBoundary.unpersist() // dead once the pairs landed
-    }
+    BatchStore.land(pairs, batchId, pairsDir)
+    cappedBoundary.unpersist() // dead once the pairs landed
     // sorted-by-band_hash append (tight row-group stats for the pruned
     // read's pushed predicates); file count stays at task count — the
     // bucketed layout is compaction's job
-    profile("append", batchId) {
-      bandStore.append(bands, batchId)
-      if (compactEvery > 0) bandStore.maybeCompact(spark, compactEvery)
-    }
+    bandStore.append(bands, batchId)
+    if (compactEvery > 0) bandStore.maybeCompact(spark, compactEvery)
   }
 
   /** Run the stream: docs under `docsDir` → near-dup pairs landed under
@@ -329,37 +294,27 @@ object StreamingDedup {
           compactEvery = compactEvery)
       }
       .start()
-    q.processAllAvailable()
+    // a batch that throws must not leave the query polling `docsDir`
+    try q.processAllAvailable()
+    catch { case e: Throwable => q.stop(); throw e }
     q
   }
 
   /** Self-contained fixture run (the q_stream_dedup_near query surface):
     * land the documents table as a multi-file parquet dir, stream it
-    * batch-by-batch through [[nearDedupStream]], return the accumulated
-    * pairs. Deterministic: the emitted pair SET is independent of the
-    * batch split (see pair-emission invariant above). The working
-    * directory is deleted before returning — the result is
-    * localCheckpointed first so it no longer reads from it.
+    * batch-by-batch through [[commitBatch]] ([[StreamFixture.run]]),
+    * return the accumulated pairs. Deterministic: the emitted pair SET
+    * is independent of the batch split (see pair-emission invariant
+    * above).
     */
   def nearDedupFixtureRun(spark: SparkSession, sfDir: String,
       threshold: Double = 0.5, nFiles: Int = 4,
-      compactEvery: Int = DefaultCompactEvery): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_dedup")
-    graft.Tables.documents(spark, sfDir)
-      .repartition(nFiles).write.parquet(s"$tmp/in")
-    val schema = spark.read.parquet(s"$tmp/in").schema
-    val q = nearDedupStream(spark, s"$tmp/in", schema,
-      s"$tmp/store", s"$tmp/pairs", s"$tmp/ck", threshold,
-      compactEvery = compactEvery)
-    q.stop()
-    val out = readPairs(spark, s"$tmp/pairs")
-      .orderBy(col("doc_a"), col("doc_b"))
-      .localCheckpoint(true)
-    // bench/verify call this repeatedly — don't leak a copy of the
-    // corpus + store + checkpoint per invocation
-    import scala.util.Try
-    java.nio.file.Files.walk(tmp).sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => { Try(java.nio.file.Files.deleteIfExists(p)); () })
-    out
-  }
+      compactEvery: Int = DefaultCompactEvery): DataFrame =
+    StreamFixture.run(graft.Tables.documents(spark, sfDir), nFiles) {
+      (batch, batchId, state) =>
+        commitBatch(batch, batchId, s"$state/store", s"$state/pairs",
+          threshold, compactEvery = compactEvery)
+    } { state =>
+      readPairs(spark, s"$state/pairs").orderBy(col("doc_a"), col("doc_b"))
+    }
 }

@@ -183,31 +183,24 @@ final class TieredStore(
     }.getOrElse(-1L)
   }
 
-  /** Append-tier batch ids currently on disk. Guarded listing (a store
-    * whose append tier was never created — e.g. compact-before-
-    * first-append — must read as empty, not throw the FileSystem's
-    * FileNotFoundException; the round-14 ADVICE finding).
+  /** Append-tier batch ids currently on disk ([[BatchStore.landedIds]]:
+    * a store whose append tier was never created — e.g. compact-before-
+    * first-append — reads as empty).
     */
   def landedBatchIds(spark: SparkSession): Seq[Long] =
-    try fsOf(spark).listStatus(new org.apache.hadoop.fs.Path(storeDir))
-      .toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("batch_id="))
-      .map(_.stripPrefix("batch_id=").toLong)
-    catch { case _: java.io.FileNotFoundException => Seq.empty }
+    BatchStore.landedIds(spark, storeDir)
 
-  /** Land `df` as the append-tier `batch_id=batchId` partition.
-    * Dynamic partition overwrite is the idempotence mechanism: a
-    * replay rewrites ONLY its own partition with the identical
-    * recomputed rows. Rows are sorted by `keyCol` within each task so
-    * row-group stats stay tight for the pruned read's pushed
-    * predicates — NO extra shuffle and no per-batch bucket fan-out.
+  /** Land `df` as the append-tier `batch_id=batchId` partition
+    * ([[BatchStore.land]] — a replay rewrites ONLY its own partition
+    * with the identical recomputed rows). Rows are sorted by `keyCol`
+    * within each task so row-group stats stay tight for the pruned
+    * read's pushed predicates — NO extra shuffle and no per-batch
+    * bucket fan-out. The append tier itself never has a `__prev` (the
+    * bucketed tier's is `<store>_bucketed__prev`), so the land's
+    * recovery probe is a no-op `exists`.
     */
   def append(df: DataFrame, batchId: Long): Unit =
-    df.withColumn("batch_id", lit(batchId))
-      .sortWithinPartitions(col(keyCol))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(storeDir)
+    BatchStore.land(df.sortWithinPartitions(col(keyCol)), batchId, storeDir)
 
   /** The accumulated store (both tiers) restricted to batches strictly
     * before `beforeBatch` — so a replayed batch sees the identical
@@ -371,7 +364,7 @@ final class TieredStore(
     val tierBytes =
       (if (oldTier.isDefined) bytesOf(bucketed.toString) else 0L) +
         landedBatchIds(spark).filter(b => b > w && b <= upTo)
-          .map(b => bytesOf(s"$storeDir/batch_id=$b")).sum
+          .map(b => bytesOf(BatchStore.partition(storeDir, b))).sum
     val m = math.min(buckets.toLong, math.max(1L,
       (tierBytes + targetBucketBytes - 1) / targetBucketBytes)).toInt
     all
@@ -391,14 +384,9 @@ final class TieredStore(
       s"$label compaction could not publish $tmp")
     fs.delete(prev, true)
     // the rewritten batches leave the append tier only after commit
-    try fsOf(spark).listStatus(new org.apache.hadoop.fs.Path(storeDir))
-      .foreach { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("batch_id=") &&
-            n.stripPrefix("batch_id=").toLong <= upTo)
-          fs.delete(st.getPath, true)
-      }
-    catch { case _: java.io.FileNotFoundException => () }
+    landedBatchIds(spark).filter(_ <= upTo).foreach { b =>
+      fs.delete(new org.apache.hadoop.fs.Path(BatchStore.partition(storeDir, b)), true)
+    }
   }
 
   /** The automatic compaction cadence for production streams (round
@@ -438,7 +426,7 @@ final class TieredStore(
     if (fresh.isEmpty) return false
     // append bytes: only above-watermark batch dirs count (garbage
     // replay dirs below the watermark are invisible data)
-    val appendBytes = fresh.map(b => bytesOf(s"$storeDir/batch_id=$b")).sum
+    val appendBytes = fresh.map(b => bytesOf(BatchStore.partition(storeDir, b))).sum
     val bucketedBytes =
       resolvedBucketedDir(fs).map(bytesOf).getOrElse(0L)
     if (appendBytes >= math.max(minBytes, (ratio * bucketedBytes).toLong)) {

@@ -65,6 +65,43 @@ class IncrementalCorpusSpec extends AnyFunSuite with SharedSpark {
     assert(ex.getMessage.contains("hubs"))
   }
 
+  test("a benchsh/ dir holding no batch_id= child fails fast like an absent one") {
+    val base = Files.createTempDirectory("graft_inc_empty_bsh").toString
+    val docs = Tables.documents(spark, sf)
+    IncrementalCorpus.ingestBatch(docs.filter(col("doc_id") % 3 === 0), 0L, base)
+    // crash debris / a manual restore: the directory survives, its
+    // committed batches do not
+    val benchsh = java.nio.file.Paths.get(base, "benchsh")
+    Files.walk(benchsh).sorted(java.util.Comparator.reverseOrder())
+      .filter(_ != benchsh)
+      .forEach(p => { Files.deleteIfExists(p); () })
+    assert(Files.isDirectory(benchsh))
+    val ex = intercept[IllegalArgumentException] {
+      IncrementalCorpus.ingestBatch(docs.filter(col("doc_id") % 3 === 1), 1L, base)
+    }
+    assert(ex.getMessage.contains("benchsh"))
+  }
+
+  test("a benchsh/ surviving only as benchsh__prev (crash mid-maintain) counts as present") {
+    val base = Files.createTempDirectory("graft_inc_prev_bsh").toString
+    val docs = Tables.documents(spark, sf)
+    val batches = (0 until 3).map(i => docs.filter(col("doc_id") % 3 === i))
+    IncrementalCorpus.ingestBatch(batches(0), 0L, base)
+    IncrementalCorpus.ingestBatch(batches(1), 1L, base)
+    // the window between maintain's two publish renames
+    Files.move(java.nio.file.Paths.get(base, "benchsh"),
+      java.nio.file.Paths.get(base, "benchsh__prev"))
+    IncrementalCorpus.ingestBatch(batches(2), 2L, base)
+    assert(!Files.exists(java.nio.file.Paths.get(base, "benchsh__prev")),
+      "the next land must merge __prev back")
+    val got = IncrementalCorpus.snapshot(spark, base)
+      .select("doc_id", "split").as[(Long, String)].collect().toMap
+    val want = CorpusPipeline.buildFrame(docs)
+      .select("doc_id", "split").as[(Long, String)].collect().toMap
+    assert(want.nonEmpty && got == want,
+      s"missing=${(want.keySet -- got.keySet).take(5)} extra=${(got.keySet -- want.keySet).take(5)}")
+  }
+
   test("auto-compaction cadence mid-ingest: snapshot parity holds and a compacted batch replays as a no-op (round 15)") {
     // compactEvery=2 over 4 batches → both the band store and the hubs
     // store flip to their bucketed tiers MID-INGEST (later batches'

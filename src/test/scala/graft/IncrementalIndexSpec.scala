@@ -32,9 +32,9 @@ class IncrementalIndexSpec extends AnyFunSuite with SharedSpark {
     IncrementalIndex.commitBatch(b0, 0L, s"$tmp/state")
     IncrementalIndex.commitBatch(b1, 1L, s"$tmp/state")
     val before = rowsOf(IncrementalIndex.snapshot(spark, s"$tmp/state"))
-    val storeBefore = IncrementalIndex.readTerms(spark, s"$tmp/state").count()
+    val storeBefore = IncrementalIndex.readRows(spark, s"$tmp/state").count()
     IncrementalIndex.commitBatch(b0, 0L, s"$tmp/state") // replay
-    assert(IncrementalIndex.readTerms(spark, s"$tmp/state").count() == storeBefore,
+    assert(IncrementalIndex.readRows(spark, s"$tmp/state").count() == storeBefore,
       "replay grew the store")
     assert(rowsOf(IncrementalIndex.snapshot(spark, s"$tmp/state")) == before,
       "replay changed the snapshot")

@@ -33,9 +33,9 @@ class IncrementalSubstrSpec extends AnyFunSuite with SharedSpark {
     IncrementalSubstr.commitBatch(b0, 0L, s"$tmp/state")
     IncrementalSubstr.commitBatch(b1, 1L, s"$tmp/state")
     val before = rowsOf(IncrementalSubstr.snapshot(spark, s"$tmp/state"))
-    val storeBefore = IncrementalSubstr.readGrams(spark, s"$tmp/state").count()
+    val storeBefore = IncrementalSubstr.readRows(spark, s"$tmp/state").count()
     IncrementalSubstr.commitBatch(b0, 0L, s"$tmp/state") // replay
-    assert(IncrementalSubstr.readGrams(spark, s"$tmp/state").count() == storeBefore,
+    assert(IncrementalSubstr.readRows(spark, s"$tmp/state").count() == storeBefore,
       "replay grew the store")
     assert(rowsOf(IncrementalSubstr.snapshot(spark, s"$tmp/state")) == before,
       "replay changed the snapshot")

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import graft.sources.{DataQuality, Maintenance}
+import graft.streaming.BatchStore
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -330,21 +331,21 @@ class MaintenanceSpec extends AnyFunSuite with SharedSpark {
       .write.mode("append").partitionBy("batch_id").parquet(s"$tmp/s__prev")
     Seq((3L, 30L)).toDF("k", "v").withColumn("batch_id", lit(1L))
       .write.mode("append").partitionBy("batch_id").parquet(s"$tmp/s__prev")
-    val got = Maintenance.readBatchStoreOr(spark, s"$tmp/s").get
+    val got = BatchStore.read(spark, s"$tmp/s").get
       .select("k", "v", "batch_id").as[(Long, Long, Long)].collect().toSet
     assert(got == Set((1L, 10L, 2L), (2L, 20L, 0L), (3L, 30L, 1L)),
       s"masked __prev batches must surface, got $got")
     // a batch id present in BOTH keeps the committed copy, no dup rows
     Seq((4L, 40L)).toDF("k", "v").withColumn("batch_id", lit(2L))
       .write.mode("append").partitionBy("batch_id").parquet(s"$tmp/s__prev")
-    val got2 = Maintenance.readBatchStoreOr(spark, s"$tmp/s").get
+    val got2 = BatchStore.read(spark, s"$tmp/s").get
       .filter(col("batch_id") === 2L)
       .select("k").as[Long].collect().toSeq
     assert(got2 == Seq(1L), s"committed copy must win for a shared batch id, got $got2")
     // recovery converges to one committed tree with all batches
-    Maintenance.recoverBatchStore(spark, s"$tmp/s")
+    BatchStore.recover(spark, s"$tmp/s")
     assert(!new java.io.File(s"$tmp/s__prev").exists())
-    val after = Maintenance.readBatchStoreOr(spark, s"$tmp/s").get
+    val after = BatchStore.read(spark, s"$tmp/s").get
       .select("k", "v", "batch_id").as[(Long, Long, Long)].collect().toSet
     assert(after == Set((1L, 10L, 2L), (2L, 20L, 0L), (3L, 30L, 1L)))
   }
