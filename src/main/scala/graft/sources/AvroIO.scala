@@ -153,10 +153,9 @@ object AvroIO {
     * partition, deflate-compressed. Distributed: each partition's rows
     * never leave their executor.
     *
-    * Attempt protocol (round 12 — the [[graft.sources.v2.ReportSink]]
-    * standard, not just retry-idempotence): each task attempt writes
-    * its OWN staging file `part-NNNNN-attempt-K.avro.tmp` and renames
-    * it into the final name only when fully written. Concurrent
+    * Attempt protocol (round 12 — not just retry-idempotence): each task
+    * attempt writes its OWN staging file `part-NNNNN-attempt-K.avro.tmp`
+    * and renames it into the final name only when fully written. Concurrent
     * attempts of one partition (speculation; a zombie attempt finishing
     * after job commit) therefore never share a file descriptor — the
     * first rename wins, the loser observes the final file exists and

@@ -50,6 +50,8 @@ final case class HttpIngestConfig(
     clock: () => Long = System.nanoTime)
 
 class HttpIngest(cfg: HttpIngestConfig) {
+  require(cfg.maxRetries >= 1,
+    s"maxRetries must be >= 1 (attempts, not retries-after-first); got ${cfg.maxRetries}")
 
   private val client = HttpClient.newHttpClient()
   private val mapper = new ObjectMapper()
@@ -66,23 +68,9 @@ class HttpIngest(cfg: HttpIngestConfig) {
     lastRequestNanos = cfg.clock()
   }
 
-  /** R4: send with exponential backoff on 429 ONLY (the reference's
-    * contract); returns the final response, whatever its status.
-    */
-  private def withBackoff(req: HttpRequest): HttpResponse[String] = {
-    var attempt = 0
-    var resp: HttpResponse[String] = null
-    while (attempt < cfg.maxRetries) {
-      throttle()
-      resp = client.send(req, HttpResponse.BodyHandlers.ofString())
-      if (resp.statusCode() != 429) return resp
-      attempt += 1
-      // no sleep after the FINAL attempt — the schedule's longest wait
-      // would precede an unconditional give-up, pure wasted wall-clock
-      if (attempt < cfg.maxRetries) cfg.sleeper(cfg.backoffBaseMs * (1L << (attempt - 1)))
-    }
-    resp
-  }
+  private def send(req: HttpRequest): HttpResponse[String] =
+    HttpIngest.sendWithBackoff(client, req, cfg.maxRetries, cfg.backoffBaseMs,
+      cfg.sleeper, () => throttle())
 
   private def post(path: String, body: String, headers: Seq[(String, String)])
       : HttpResponse[String] = {
@@ -91,7 +79,7 @@ class HttpIngest(cfg: HttpIngestConfig) {
       .header("Content-Type", "application/json; charset=UTF-8")
       .header("Accept", "application/json; charset=UTF-8")
     headers.foreach { case (k, v) => b.header(k, v) }
-    withBackoff(b.build())
+    send(b.build())
   }
 
   /** R1: login, returns the session token; non-200 fails fast. */
@@ -117,7 +105,7 @@ class HttpIngest(cfg: HttpIngestConfig) {
       .header("Accept", "application/json; charset=UTF-8")
       .header("x-redlock-auth", token)
       .build()
-    val resp = withBackoff(req)
+    val resp = send(req)
     if (resp.statusCode() == 200) Some(resp.body()) else None
   }
 
@@ -171,5 +159,30 @@ class HttpIngest(cfg: HttpIngestConfig) {
   def land(spark: SparkSession, payloads: Seq[String]): DataFrame = {
     import spark.implicits._
     payloads.toDF("json")
+  }
+}
+
+object HttpIngest {
+
+  /** R4: send with exponential backoff on 429 ONLY (the reference's
+    * contract): up to `maxRetries` attempts, sleeping
+    * backoffBase·2^(attempt-1) between them; returns the final response,
+    * whatever its status. `throttle` runs before every attempt — a
+    * retry is a request too. Shared by this client and the DSv2 page
+    * readers, which bring their own client, sleeper and throttle.
+    */
+  def sendWithBackoff(client: HttpClient, req: HttpRequest, maxRetries: Int,
+      backoffBaseMs: Long, sleeper: Long => Unit,
+      throttle: () => Unit): HttpResponse[String] = {
+    @annotation.tailrec
+    def attempt(n: Int): HttpResponse[String] = {
+      throttle()
+      val resp = client.send(req, HttpResponse.BodyHandlers.ofString())
+      // no sleep after the FINAL attempt — the schedule's longest wait
+      // would precede an unconditional give-up, pure wasted wall-clock
+      if (resp.statusCode() != 429 || n >= maxRetries) resp
+      else { sleeper(backoffBaseMs * (1L << (n - 1))); attempt(n + 1) }
+    }
+    attempt(1)
   }
 }

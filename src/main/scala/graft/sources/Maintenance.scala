@@ -58,41 +58,6 @@ object Maintenance {
       .write.mode(SaveMode.Overwrite).parquet(outDir)
   }
 
-  /** Publish `df` to `finalDir` via a staging directory + rename swap.
-    *
-    * CAVEATS (prefer [[publishVersioned]] for production): between
-    * rename(final→.old) and rename(staging→final) there is a window
-    * where `finalDir` does not exist; a driver crash inside it strands
-    * the data at `finalDir + ".old"` (recovery: rename .old back by
-    * hand). On object stores (s3a) "rename" is a non-atomic O(data)
-    * copy, so neither step is atomic there. [[publishVersioned]] removes
-    * both problems by never moving data — only a one-object pointer
-    * flips. Kept as the minimal directory-swap form of the reference's
-    * delete-based rollback (R24/bug B5).
-    */
-  def publishAtomic(df: DataFrame, finalDir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val stagingPath = new Path(finalDir + ".staging")
-    val finalPath = new Path(finalDir)
-    val backup = new Path(finalDir + ".old")
-    // the filesystem OWNING the target path — FileSystem.get(conf) would
-    // resolve the default FS and break for s3a://... targets in local mode
-    val fs = finalPath.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    df.write.mode(SaveMode.Overwrite).parquet(stagingPath.toString)
-    val hadPrevious = fs.exists(finalPath)
-    if (hadPrevious) {
-      if (fs.exists(backup)) fs.delete(backup, true)
-      require(fs.rename(finalPath, backup), s"could not move previous version aside: $finalDir")
-    }
-    if (!fs.rename(stagingPath, finalPath)) {
-      // restore the previous version before failing — readers must never
-      // be left with no dataset at finalDir
-      if (hadPrevious) fs.rename(backup, finalPath)
-      throw new IllegalStateException(s"atomic publish rename failed: $finalDir")
-    }
-    if (hadPrevious) fs.delete(backup, true)
-  }
-
   /** MERGE-style upsert: rows of `updates` replace `existing` rows with
     * the same key; unmatched update rows are inserts. One left-anti join
     * (shuffle on the key both sides) + a union — the incremental-refresh

@@ -17,8 +17,9 @@ import org.apache.spark.sql.types._
   * null fill (R9) = `na.fill(0)`; the per-service fan-out loop (R11) is
   * a single groupBy/join; the per-account dict aggregation (R17) groups
   * by accountId, not display name (bug B3); report projection+rename
-  * (R19/R20); partitioned CSV sink (R22/R23) through Spark's commit
-  * protocol instead of hand-rolled rollback (R24, bug B5). No
+  * (R19/R20); the reference's exact QUOTE_NONNUMERIC CSVs in its
+  * literal date folders (R22/R23), published all-or-nothing by
+  * stage-then-swap instead of hand-rolled rollback (R24, bug B5). No
   * credentials anywhere (config comes from the environment; the
   * reference hard-codes them — SURVEY.md §0 security note).
   *
@@ -174,133 +175,68 @@ object PrismaConnector {
     }
   }
 
-  /** R22/R23: header'd, quoted CSV under a hive-partitioned date layout
-    * (`transaction_date=YYYY-MM-DD/`) — strictly better than the
-    * reference's hand-built `{yyyy}/{MonthName}/{d}` key — written
-    * through Spark's commit protocol (atomic publish; replaces R24's
-    * delete-based rollback).
+  /** The QUOTE_NONNUMERIC row renderer: one map-only projection to
+    * (value, part). The reference renders `transaction_date` as a
+    * strftime STRING and to_csv quotes it, so the partition column is
+    * always a quoted cell.
     */
-  def writeReport(df: DataFrame, path: String): Unit = {
-    val out = if (df.columns.contains("transaction_date")) df
-      else df.withColumn("transaction_date",
-        date_format(current_date(), "yyyy-MM-dd"))
-    out.write.mode("overwrite")
-      .partitionBy("transaction_date")
-      .option("header", "true").option("quoteAll", "true")
-      .csv(path)
-  }
-
-  /** [[writeReport]] in the reference's EXACT csv dialect —
-    * QUOTE_NONNUMERIC (`aler_report/lambda.py:318`: pandas `to_csv(...,
-    * quoting=QUOTE_NONNUMERIC)` quotes string cells, leaves numeric
-    * cells bare). Spark's csv sink quotes all-or-minimal with no
-    * per-type mode (and re-quotes delimiter-bearing cells no matter
-    * what), so the dialect is built IN the plan and written through the
-    * TEXT sink: string columns are escaped (`"` → `""`) and wrapped in
-    * literal quotes, numerics cast to their text form, the record
-    * assembled with concat_ws — every byte final before the sink sees
-    * it. Still one distributed map-only projection through the same
-    * committed, hive-partitioned sink — the dialect costs no plan
-    * shape. ConnectorSpec pins the byte-level dialect.
-    */
-  def writeReportQuoteNonNumeric(df: DataFrame, path: String): Unit = {
-    val out = withReportDate(df)
-    val part = "transaction_date"
-    renderQuoteNonNumeric(out, part)
-      .write.mode("overwrite")
-      .partitionBy(part)
-      .text(path)
-    // one header line per partition dir convention is NOT the pandas
-    // layout; the reference writes ONE file with one header. Emit the
-    // header once at the root (same commit-protocol-adjacent move as a
-    // _SUCCESS marker): readers that reassemble partitions prepend it.
-    // Resolve the filesystem FROM the path so the sidecar lands wherever
-    // the text sink wrote (local, HDFS, s3a) instead of assuming a local
-    // java.io path — the sink above supports any Hadoop filesystem and
-    // the header must follow it.
-    val headerPath = new org.apache.hadoop.fs.Path(path, "_header.csv")
-    val hfs = headerPath.getFileSystem(
-      df.sparkSession.sessionState.newHadoopConf())
-    val os = hfs.create(headerPath, true)
-    try os.write((headerLine(out, part) + "\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally os.close()
-  }
-
-  private def withReportDate(df: DataFrame): DataFrame =
-    if (df.columns.contains("transaction_date")) df
-    else df.withColumn("transaction_date",
-      date_format(current_date(), "yyyy-MM-dd"))
-
-  /** The QUOTE_NONNUMERIC row renderer shared by the hive-layout and
-    * literal-layout writers: one map-only projection to (value, part).
-    */
-  private def renderQuoteNonNumeric(out: DataFrame, part: String,
-      includePart: Boolean = false): DataFrame = {
+  private def renderQuoteNonNumeric(out: DataFrame, part: String): DataFrame = {
     import org.apache.spark.sql.types.{StringType => SStr}
-    val cells = out.schema.fields
-      .filter(f => includePart || f.name != part).map { f =>
-        // includePart: the literal layout keeps the partition column as
-        // a rendered cell (the reference assigns transaction_date as a
-        // strftime STRING and to_csv quotes it) — the hive layout drops
-        // it because partitionBy already encodes it in the path.
-        if (f.dataType == SStr || f.name == part)
-          concat(lit("\""),
-            regexp_replace(coalesce(col(f.name).cast("string"), lit("")),
-              "\"", "\"\""),
-            lit("\"")).as(f.name)
-        else
-          // coalesce AFTER the cast: concat_ws silently DROPS null
-          // arguments, so a bare null numeric cell would delete its field
-          // and shift every later cell left. pandas QUOTE_NONNUMERIC
-          // renders NaN/None as an empty bare field — match that.
-          coalesce(col(f.name).cast("string"), lit("")).as(f.name)
-      }
+    val cells = out.schema.fields.map { f =>
+      if (f.dataType == SStr || f.name == part)
+        concat(lit("\""),
+          regexp_replace(coalesce(col(f.name).cast("string"), lit("")),
+            "\"", "\"\""),
+          lit("\"")).as(f.name)
+      else
+        // coalesce AFTER the cast: concat_ws silently DROPS null
+        // arguments, so a bare null numeric cell would delete its field
+        // and shift every later cell left. pandas QUOTE_NONNUMERIC
+        // renders NaN/None as an empty bare field — match that.
+        coalesce(col(f.name).cast("string"), lit("")).as(f.name)
+    }
     out.select(concat_ws(",", cells.toIndexedSeq: _*).as("value"), col(part))
   }
 
   /** The QUOTE_NONNUMERIC header line (pandas quotes header cells). */
-  private def headerLine(out: DataFrame, part: String,
-      includePart: Boolean = false): String = {
+  private def headerLine(out: DataFrame): String = {
     import org.apache.spark.sql.types.{StringType => SStr}
-    out.schema.fieldNames.filter(n => includePart || n != part).map { n =>
+    out.schema.fieldNames.map { n =>
       if (out.schema(n).dataType == SStr) "\"" + n.replace("\"", "\"\"") + "\""
       else "\"" + n + "\""
     }.mkString(",")
   }
 
-  /** R23 byte-compat layout (round 12, OPTIONAL — hive `partitionBy`
-    * stays the default and the recommended form): the reference's
-    * literal `{yyyy}/{MonthName}/{d-MonthName-yyyy}/{file}.csv` object
-    * key (`prisma_report/lambda.py:26-30,381` date_folder), for
-    * drop-in replacement of its S3 consumer contract. Plan shape is
-    * UNCHANGED from [[writeReportQuoteNonNumeric]]: rows render
-    * map-side in the exact dialect; a per-date header row (pandas
-    * writes one file WITH header per date) rides the same shuffle with
-    * a sort flag so it lands first in its file without any extra sort
-    * (the repartition-by-date ordering already satisfies the dynamic
-    * sink's required ordering); `repartition(col(date))` pins ONE file
-    * per date, matching the reference's one-object-per-day contract.
-    * The literal tree is then produced by a BOUNDED driver-side rename
-    * pass — one same-FS metadata op per date, no data movement — and
-    * committed with a trailing _SUCCESS.
-    */
-  def writeReportLiteralLayout(df: DataFrame, path: String,
-      fileName: String = "report"): Unit =
-    writeReportsLiteralLayout(Seq(df -> fileName), path)
-
-  /** Multi-report form of [[writeReportLiteralLayout]] — the shape the
-    * reference's handler() actually publishes: SEVERAL report files into
-    * ONE literal date-folder tree ({yyyy}/{MonthName}/{d-MonthName-yyyy}/
+  /** R22/R23/R24: the engine's one report publisher, in the shape the
+    * reference's handler() publishes — SEVERAL report files into ONE
+    * literal date-folder tree ({yyyy}/{MonthName}/{d-MonthName-yyyy}/
     * {Inventory_Report,Inventory_Resource_Type_Report,Alert_Report}.csv,
-    * lambda.py:406-418), with all-or-nothing semantics (its rollback()
-    * deletes the already-uploaded keys on any failure). Here the
-    * rollback is structural instead of compensating: every report stages
-    * into its own sibling tree first, and only after ALL Spark jobs
-    * succeed does the bounded driver-side swap touch the committed tree
-    * — a failure in any report's job leaves the prior committed tree
-    * byte-identical (stronger than the reference, which deletes and can
-    * crash mid-rollback).
+    * `prisma_report/lambda.py:26-30,381,406-418`), in its exact csv
+    * dialect, QUOTE_NONNUMERIC (`aler_report/lambda.py:318`: strings
+    * quoted, numerics bare, quoted header), with all-or-nothing
+    * semantics (its rollback() deletes the already-uploaded keys on any
+    * failure).
+    *
+    * Spark's csv sink quotes all-or-minimal with no per-type mode (and
+    * re-quotes delimiter-bearing cells no matter what), so rows render
+    * map-side in the exact dialect and go through the TEXT sink; a
+    * per-date header row rides the same shuffle with a sort flag so it
+    * lands first in its file without any extra sort (the
+    * repartition-by-date ordering already satisfies the dynamic sink's
+    * required ordering), and `repartition(col(date))` pins ONE file per
+    * date (the reference's one-object-per-day contract).
+    *
+    * The rollback is structural instead of compensating: every report
+    * stages into its own sibling tree first, and only after ALL Spark
+    * jobs succeed does a bounded driver-side rename pass (one same-FS
+    * metadata op per date, no data movement) build the committed tree
+    * and mark it with a trailing _SUCCESS — a failure in any report's
+    * job leaves the prior committed tree byte-identical (stronger than
+    * the reference, which deletes and can crash mid-rollback).
+    *
+    * Every report must carry a `transaction_date` column of yyyy-MM-dd
+    * strings: dates are payload-derived, the wall clock is never
+    * consulted.
     */
   def writeReportsLiteralLayout(reports: Seq[(DataFrame, String)],
       path: String): Unit = {
@@ -308,9 +244,11 @@ object PrismaConnector {
     require(reports.map(_._2).distinct.size == reports.size,
       s"duplicate literal-layout file names: ${reports.map(_._2)}")
     val part = "transaction_date"
-    val outs = reports.map { case (df, name) => (withReportDate(df), name) }
+    val undated = reports.collect { case (df, name) if !df.columns.contains(part) => name }
+    require(undated.isEmpty,
+      s"literal layout requires a $part column in every report; missing in: $undated")
     val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(outs.head._1.sparkSession.sessionState.newHadoopConf())
+      .getFileSystem(reports.head._1.sparkSession.sessionState.newHadoopConf())
     val root = new org.apache.hadoop.fs.Path(path)
     val qualRoot = fs.makeQualified(root)
     val prev = new org.apache.hadoop.fs.Path(qualRoot.getParent,
@@ -338,14 +276,13 @@ object PrismaConnector {
     // to_date THROWS CANNOT_PARSE on a malformed string mid-aggregate;
     // try_to_date yields null so malformed rows are COUNTED and
     // reported through the same clear require message as nulls.
-    outs.foreach { case (out, name) =>
+    reports.foreach { case (out, name) =>
       val bad = out.agg(count(when(col(part).isNull ||
           try_to_date(col(part), "yyyy-MM-dd").isNull, 1)).as("n"))
         .head().getLong(0)
       require(bad == 0,
         s"literal layout requires non-null yyyy-MM-dd $part values; $bad rows of " +
-          s"'$name' violate (the hive-layout writeReportQuoteNonNumeric accepts " +
-          "them — use that, or fix the dates)")
+          s"'$name' violate")
     }
     // The date-folder universe is the UNION of every report's dates
     // (round-14 review): the reference's to_csv always uploads a
@@ -354,7 +291,7 @@ object PrismaConnector {
     // (or no rows at all) publishes a header-only CSV there instead of
     // silently missing under a fresh _SUCCESS. Bounded collect: a
     // publish covers a handful of calendar dates by construction.
-    val allDates: Seq[String] = outs.map(_._1.select(col(part)))
+    val allDates: Seq[String] = reports.map(_._1.select(col(part)))
       .reduce(_ unionByName _).distinct().collect().map(_.getString(0)).toSeq
     require(allDates.nonEmpty,
       s"every report is empty — no $part anywhere to anchor the literal " +
@@ -378,21 +315,20 @@ object PrismaConnector {
       .ofPattern("MMMM", java.util.Locale.ENGLISH)
     var hadPrev = false
     try {
-      val stagings = outs.zipWithIndex.map { case ((out, name), i) =>
+      val stagings = reports.zipWithIndex.map { case ((out, name), i) =>
         val staging = stagingPath(i)
         // The reference renders transaction_date as a quoted CSV column
         // (lambda.py:358,377 assigns the strftime string, to_csv keeps
-        // it) AND uses it as the folder key — so unlike the hive
-        // layout, the partition column stays in header and rows
-        // (includePart).
-        val data = renderQuoteNonNumeric(out, part, includePart = true)
+        // it) AND uses it as the folder key — so the partition column
+        // stays in header and rows.
+        val data = renderQuoteNonNumeric(out, part)
           .withColumn("__hdr", lit(0))
         // header rows for EVERY date in the publish (not just this
         // report's own dates) — the all-files-per-folder contract above
         val headers = out.sparkSession
           .createDataset(allDates)(org.apache.spark.sql.Encoders.STRING)
           .toDF(part)
-          .select(lit(headerLine(out, part, includePart = true)).as("value"),
+          .select(lit(headerLine(out)).as("value"),
             col(part), lit(1).as("__hdr"))
         data.unionByName(headers)
           .repartition(col(part))
@@ -432,7 +368,7 @@ object PrismaConnector {
           }
       }
       fs.create(new org.apache.hadoop.fs.Path(root, "_SUCCESS"), true).close()
-    } finally outs.indices.foreach { i =>
+    } finally reports.indices.foreach { i =>
       fs.delete(stagingPath(i), true) // staging never survives, even a failed run
     }
     if (hadPrev) fs.delete(prev, true)

@@ -1,15 +1,12 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
-
 /** End-to-end report pipeline — the reference's `handler()` orchestration
-  * (`/root/reference/modules/src/prisma_report/lambda.py:386-441`, R25)
-  * as one Spark driver program: inventory report → per-service
-  * resource-type report → alert report, each published to a
-  * hive-partitioned CSV sink through the commit protocol (no rollback
-  * bookkeeping — R24). Fixture payloads stand in for the live API
-  * (offline build); a deployment swaps [[Fixtures]] for landed JSON or
-  * the DSv2 source.
+  * (`prisma_report/lambda.py:386-441`, R25) as one Spark driver program:
+  * [[PrismaConnector.runReportPipelineLiteral]] publishes the inventory,
+  * per-service resource-type and alert reports into one literal
+  * date-folder tree, all-or-nothing. Fixture payloads stand in for the
+  * live API (offline build); a deployment swaps [[Fixtures]] for
+  * [[HttpIngest]]'s landed pages.
   *
   * Usage: runMain graft.sources.ReportPipeline <outDir>
   */
@@ -63,39 +60,14 @@ object ReportPipeline {
       """{"policyId": "p2", "items": []}""")
   }
 
-  /** Run all three reports to `outDir`; returns per-report row counts.
-    * Counts are collected via `observe()` during the write — no second
-    * execution of each report plan.
-    */
-  def run(spark: SparkSession, outDir: String): Map[String, Long] = {
-    import org.apache.spark.sql.{DataFrame, Observation}
-    import org.apache.spark.sql.functions.{count, lit}
-    import spark.implicits._
-    def publish(df: DataFrame, path: String, name: String): Long = {
-      val obs = new Observation(s"rows_$name")
-      PrismaConnector.writeReport(
-        df.observe(obs, count(lit(1)).as("n")), path)
-      obs.get("n").asInstanceOf[Long]
-    }
-    Map(
-      "inventory" -> publish(
-        PrismaConnector.inventoryReport(spark, Fixtures.inventory.toDF("json")),
-        s"$outDir/inventory_report", "inv"),
-      "resource_type" -> publish(
-        PrismaConnector.resourceTypeReport(spark, Fixtures.resourceType.toDF("service", "json")),
-        s"$outDir/inventory_resource_type_report", "rt"),
-      "alert" -> publish(
-        PrismaConnector.alertReport(spark, Fixtures.policies.toDF("json"),
-          Fixtures.alertPages.toDF("json")),
-        s"$outDir/alert_report", "al"))
-  }
-
   def main(args: Array[String]): Unit = {
     val outDir = if (args.nonEmpty) args(0) else "/tmp/graft_reports"
     val spark = graft.GraftSession()
-    val counts = run(spark, outDir)
-    println(s"REPORTS written to $outDir: " +
-      counts.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString(", "))
+    import spark.implicits._
+    PrismaConnector.runReportPipelineLiteral(spark,
+      Fixtures.inventory.toDF("json"), Fixtures.resourceType.toDF("service", "json"),
+      Fixtures.policies.toDF("json"), Fixtures.alertPages.toDF("json"), outDir)
+    println(s"REPORTS published to $outDir")
     spark.stop()
   }
 }

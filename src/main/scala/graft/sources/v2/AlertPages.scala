@@ -83,9 +83,8 @@ class AlertPages extends TableProvider {
     // SQL OPTIONS must not silently fall back to defaults), so re-wrap
     // the raw properties map before lookup.
     val opts = new CaseInsensitiveStringMap(properties)
-    // maxRetries counts ATTEMPTS (sendWithBackoff's loop bound): 0 would
-    // mean "send nothing" and return null, NPE'ing the reader — refuse
-    // the misconfiguration here, where the user can see which option.
+    // maxRetries counts ATTEMPTS (HttpIngest.sendWithBackoff's loop
+    // bound): refuse 0 here, where the user can see which option.
     val maxRetries = opts.getInt("httpMaxRetries", 4)
     require(maxRetries >= 1,
       s"httpMaxRetries must be >= 1 (attempts, not retries-after-first); got $maxRetries")
@@ -120,8 +119,8 @@ case class LiveHttp(base: String, token: String, maxRetries: Int = 4,
 
 /** Executor-side HTTP plumbing shared by every live page reader in the
   * JVM: ONE HttpClient (connection reuse across partitions instead of a
-  * socket per page), a 429-only exponential-backoff send (R4 semantics,
-  * mirrored from HttpIngest.withBackoff), and a JVM-wide inter-request
+  * socket per page), [[graft.sources.HttpIngest.sendWithBackoff]]'s
+  * 429-only exponential backoff (R4), and a JVM-wide inter-request
   * throttle gate (R5). The sleeper is injectable so specs assert the
   * exact schedule wall-clock-free (local mode: executor == driver JVM);
   * clusters use the default.
@@ -137,7 +136,7 @@ object AlertHttp {
   private val gates =
     new java.util.concurrent.ConcurrentHashMap[String, AtomicLong]()
 
-  private def throttle(base: String, minGapMs: Long): Unit = if (minGapMs > 0) {
+  private[v2] def throttle(base: String, minGapMs: Long): Unit = if (minGapMs > 0) {
     val gate = gates.computeIfAbsent(base, _ => new AtomicLong(Long.MinValue))
     val gapNs = minGapMs * 1000000L
     var slot = 0L
@@ -150,26 +149,6 @@ object AlertHttp {
     }
     val waitMs = (slot - System.nanoTime()) / 1000000L
     if (waitMs > 0) sleeper(waitMs)
-  }
-
-  /** Send with the R4 contract: ONLY 429 retries (other statuses return
-    * immediately for the caller to judge), sleeping
-    * backoffBase·2^attempt between attempts, no sleep after the final
-    * one. Each attempt re-passes the throttle gate — a retry is a
-    * request too.
-    */
-  def sendWithBackoff(req: java.net.http.HttpRequest, cfg: LiveHttp)
-      : java.net.http.HttpResponse[String] = {
-    var attempt = 0
-    var resp: java.net.http.HttpResponse[String] = null
-    while (attempt < cfg.maxRetries) {
-      throttle(cfg.base, cfg.minGapMs)
-      resp = client.send(req, java.net.http.HttpResponse.BodyHandlers.ofString())
-      if (resp.statusCode() != 429) return resp
-      attempt += 1
-      if (attempt < cfg.maxRetries) sleeper(cfg.backoffBaseMs * (1L << (attempt - 1)))
-    }
-    resp
   }
 }
 
@@ -452,7 +431,9 @@ class AlertPageReaderFactory extends PartitionReaderFactory {
           .header("Accept", "application/json; charset=UTF-8")
           .header("x-redlock-auth", cfg.token)
           .build()
-        val resp = AlertHttp.sendWithBackoff(req, cfg)
+        val resp = graft.sources.HttpIngest.sendWithBackoff(AlertHttp.client, req,
+          cfg.maxRetries, cfg.backoffBaseMs, AlertHttp.sleeper,
+          () => AlertHttp.throttle(cfg.base, cfg.minGapMs))
         require(resp.statusCode() == 200,
           s"page ${p.page} fetch failed with status ${resp.statusCode()} after retries")
         val items = mapper.readTree(resp.body()).path("items")

@@ -173,9 +173,8 @@ class AlertPagesSourceSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("httpMaxRetries < 1 is refused at option-parse time with a clear error (round 12)") {
-    // maxRetries bounds sendWithBackoff's ATTEMPT loop: 0 would send
-    // nothing, return null, and NPE deep in the reader — surface the
-    // misconfiguration where the user can see which option instead
+    // maxRetries bounds sendWithBackoff's ATTEMPT loop: surface a 0
+    // where the user can see which option, not deep in the reader
     val e = intercept[IllegalArgumentException] {
       spark.read.format("graft.sources.v2.AlertPages")
         .option("pages", "1").option("pageSize", "5")

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import graft.sources.PrismaConnector
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Connector-layer semantics vs the reference pipeline (SURVEY.md §2a),
   * including the §7.5 bug fixes and the FIXTURES.md §B edge cases:
@@ -13,6 +14,15 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ConnectorSpec extends AnyFunSuite with SharedSpark {
   import spark.implicits._
+
+  /** Every file under `dir`: relative path → bytes. */
+  private def tree(dir: String): Map[String, Seq[Byte]] = {
+    val root = java.nio.file.Paths.get(dir)
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.filter(Files.isRegularFile(_))
+      .map(p => root.relativize(p).toString -> Files.readAllBytes(p).toSeq).toMap
+    finally walk.close()
+  }
 
   private val invPayload =
     """{"timestamp": 1712500000000, "requestedTimestamp": 1712500000000,
@@ -124,27 +134,19 @@ class ConnectorSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("end-to-end pipeline (R25): three reports published to partitioned CSV") {
+    import graft.sources.ReportPipeline.Fixtures
     val out = Files.createTempDirectory("graft_pipeline").toString
-    val counts = graft.sources.ReportPipeline.run(spark, out)
-    assert(counts("inventory") == 2)
-    assert(counts("resource_type") == 3)
-    assert(counts("alert") == 3) // accounts 111, 222, 333
-    for (r <- Seq("inventory_report", "inventory_resource_type_report", "alert_report")) {
-      val back = spark.read.option("header", "true").csv(s"$out/$r")
-      assert(back.count() > 0, s"$r must contain rows")
-    }
-  }
-
-  test("report sink: hive-partitioned quoted CSV roundtrip (R22/R23)") {
-    val dir = Files.createTempDirectory("graft_report_sink").toString
-    val report = PrismaConnector.inventoryReport(spark, Seq(invPayload).toDF("json"))
-    PrismaConnector.writeReport(report, dir)
-    val back = spark.read.option("header", "true").csv(dir)
-    assert(back.count() == 2)
-    // hive partition column materialized from the path
-    assert(back.columns.contains("transaction_date"))
-    assert(new java.io.File(dir).listFiles()
-      .exists(_.getName.startsWith("transaction_date=")))
+    PrismaConnector.runReportPipelineLiteral(spark,
+      Fixtures.inventory.toDF("json"), Fixtures.resourceType.toDF("service", "json"),
+      Fixtures.policies.toDF("json"), Fixtures.alertPages.toDF("json"), out)
+    // one payload-derived date folder holding all three reports
+    val folder = new java.io.File(s"$out/2024/April/7-April-2024")
+    def dataRows(r: String) =
+      scala.io.Source.fromFile(new java.io.File(folder, s"$r.csv")).getLines().size - 1
+    assert(dataRows("Inventory_Report") == 2)
+    assert(dataRows("Inventory_Resource_Type_Report") == 3)
+    assert(dataRows("Alert_Report") == 3) // accounts 111, 222, 333
+    assert(new java.io.File(s"$out/_SUCCESS").isFile)
   }
 
   test("QUOTE_NONNUMERIC sink: strings quoted, numerics bare, quotes doubled (R22 exact dialect)") {
@@ -154,28 +156,23 @@ class ConnectorSpec extends AnyFunSuite with SharedSpark {
       ("svc one", 3L, 1.5, "has \"quotes\" inside", "2024-03-01"),
       ("svc,two", 0L, 0.0, "plain", "2024-03-01"))
       .toDF("name", "n_failed", "ratio", "note", "transaction_date")
-    PrismaConnector.writeReportQuoteNonNumeric(report, dir)
-    val lines = new java.io.File(dir).listFiles()
-      .filter(_.getName.startsWith("transaction_date="))
-      .flatMap(_.listFiles().filter(f =>
-        f.getName.endsWith(".txt") || f.getName.endsWith(".csv")))
-      .flatMap(f => scala.io.Source.fromFile(f).getLines().toList)
-      .sorted
-    assert(lines.length == 2)
+    PrismaConnector.writeReportsLiteralLayout(Seq(report -> "report"), dir)
+    val file = s"$dir/2024/March/1-March-2024/report.csv"
+    val lines = scala.io.Source.fromFile(file).getLines().toList
+    // header first, all names quoted (header cells are strings)
+    assert(lines.head == """"name","n_failed","ratio","note","transaction_date"""")
+    assert(lines.length == 3)
     // pandas QUOTE_NONNUMERIC byte-level dialect: strings quoted (incl.
     // embedded delimiter), quotes escaped by doubling, numbers bare
-    assert(lines.contains(""""svc one",3,1.5,"has ""quotes"" inside""""),
+    assert(lines.contains(""""svc one",3,1.5,"has ""quotes"" inside","2024-03-01""""),
       s"dialect mismatch: $lines")
-    assert(lines.contains(""""svc,two",0,0.0,"plain""""), s"dialect mismatch: $lines")
-    // header emitted once, all names quoted (header cells are strings)
-    val header = scala.io.Source.fromFile(s"$dir/_header.csv").getLines().next()
-    assert(header == """"name","n_failed","ratio","note"""")
+    assert(lines.contains(""""svc,two",0,0.0,"plain","2024-03-01""""),
+      s"dialect mismatch: $lines")
     // and the dialect stays machine-readable: a schema'd read recovers
     // the exact values
-    val back = spark.read
-      .schema("name STRING, n_failed BIGINT, ratio DOUBLE, note STRING")
-      .csv(new java.io.File(dir).listFiles()
-        .filter(_.getName.startsWith("transaction_date=")).head.toString)
+    val back = spark.read.option("header", "true")
+      .schema("name STRING, n_failed BIGINT, ratio DOUBLE, note STRING, transaction_date STRING")
+      .csv(file)
     assert(back.collect().map(r => (r.getString(0), r.getLong(1))).toSet ==
       Set(("svc one", 3L), ("svc,two", 0L)))
   }
@@ -191,7 +188,7 @@ class ConnectorSpec extends AnyFunSuite with SharedSpark {
       ("svc three", 0L, "2024-12-31"))
       .toDF("name", "n_failed", "transaction_date")
       .repartition(2)
-    PrismaConnector.writeReportLiteralLayout(report, dir, fileName = "alert_report")
+    PrismaConnector.writeReportsLiteralLayout(Seq(report -> "alert_report"), dir)
     val march = new java.io.File(s"$dir/2024/March/5-March-2024/alert_report.csv")
     val dec = new java.io.File(s"$dir/2024/December/31-December-2024/alert_report.csv")
     assert(march.isFile && dec.isFile,
@@ -219,7 +216,7 @@ class ConnectorSpec extends AnyFunSuite with SharedSpark {
     // and must not leave the stale December date under fresh _SUCCESS
     val rerun = Seq(("svc four", 9L, "2024-03-05"))
       .toDF("name", "n_failed", "transaction_date")
-    PrismaConnector.writeReportLiteralLayout(rerun, dir, fileName = "alert_report")
+    PrismaConnector.writeReportsLiteralLayout(Seq(rerun -> "alert_report"), dir)
     val m2 = scala.io.Source.fromFile(
       s"$dir/2024/March/5-March-2024/alert_report.csv").getLines().toList
     assert(m2 == List("\"name\",\"n_failed\",\"transaction_date\"",
@@ -298,7 +295,7 @@ class ConnectorSpec extends AnyFunSuite with SharedSpark {
     val dir = Files.createTempDirectory("graft_report_lit_swap").toString
     val first = Seq(("svc one", 3L, "2024-03-05"))
       .toDF("name", "n_failed", "transaction_date")
-    PrismaConnector.writeReportLiteralLayout(first, dir, fileName = "alert_report")
+    PrismaConnector.writeReportsLiteralLayout(Seq(first -> "alert_report"), dir)
     assert(new java.io.File(s"$dir/_SUCCESS").isFile)
     // second publish passes the date guard but fails DURING the Spark
     // staging write (raise_error fires row-side). Round-13 review: the
@@ -310,7 +307,7 @@ class ConnectorSpec extends AnyFunSuite with SharedSpark {
       .withColumn("name", when(col("name") === "boom",
         raise_error(lit("mid-job failure"))).otherwise(col("name")))
     intercept[Exception](
-      PrismaConnector.writeReportLiteralLayout(boom, dir, fileName = "alert_report"))
+      PrismaConnector.writeReportsLiteralLayout(Seq(boom -> "alert_report"), dir))
     val m = scala.io.Source.fromFile(
       s"$dir/2024/March/5-March-2024/alert_report.csv").getLines().toList
     assert(m == List("\"name\",\"n_failed\",\"transaction_date\"",
@@ -325,7 +322,7 @@ class ConnectorSpec extends AnyFunSuite with SharedSpark {
     val dir = Files.createTempDirectory("graft_report_lit_rec").toString
     val good = Seq(("svc one", 3L, "2024-03-05"))
       .toDF("name", "n_failed", "transaction_date")
-    PrismaConnector.writeReportLiteralLayout(good, dir, fileName = "alert_report")
+    PrismaConnector.writeReportsLiteralLayout(Seq(good -> "alert_report"), dir)
     // simulate a crash mid-swap: the publisher had renamed the
     // committed tree aside and died before rebuilding root + _SUCCESS
     val fs = new org.apache.hadoop.fs.Path(dir)
@@ -338,7 +335,7 @@ class ConnectorSpec extends AnyFunSuite with SharedSpark {
     // delete lost the last committed data permanently
     val next = Seq(("svc two", 5L, "2024-03-06"))
       .toDF("name", "n_failed", "transaction_date")
-    PrismaConnector.writeReportLiteralLayout(next, dir, fileName = "alert_report")
+    PrismaConnector.writeReportsLiteralLayout(Seq(next -> "alert_report"), dir)
     val m = scala.io.Source.fromFile(
       s"$dir/2024/March/6-March-2024/alert_report.csv").getLines().toList
     assert(m == List("\"name\",\"n_failed\",\"transaction_date\"",
@@ -352,7 +349,7 @@ class ConnectorSpec extends AnyFunSuite with SharedSpark {
       new org.apache.hadoop.fs.Path(s"${dir}__prev_literal")))
     val bad = Seq(("x", Option.empty[String])).toDF("name", "transaction_date")
     intercept[IllegalArgumentException](
-      PrismaConnector.writeReportLiteralLayout(bad, dir))
+      PrismaConnector.writeReportsLiteralLayout(Seq(bad -> "report"), dir))
     val restored = scala.io.Source.fromFile(
       s"$dir/2024/March/6-March-2024/alert_report.csv").getLines().toList
     assert(restored.last == "\"svc two\",5,\"2024-03-06\"",
@@ -366,7 +363,7 @@ class ConnectorSpec extends AnyFunSuite with SharedSpark {
     val report = Seq(("a", Some("2024-03-05")), ("b", None))
       .toDF("name", "transaction_date")
     val e = intercept[IllegalArgumentException](
-      PrismaConnector.writeReportLiteralLayout(report, dir))
+      PrismaConnector.writeReportsLiteralLayout(Seq(report -> "report"), dir))
     assert(e.getMessage.contains("yyyy-MM-dd"), e.getMessage)
     // nothing half-published
     assert(!new java.io.File(s"$dir/_SUCCESS").exists())
@@ -376,9 +373,54 @@ class ConnectorSpec extends AnyFunSuite with SharedSpark {
     val nonIso = Seq(("a", "05/03/2024"), ("b", "2024-03-05"))
       .toDF("name", "transaction_date")
     val e2 = intercept[IllegalArgumentException](
-      PrismaConnector.writeReportLiteralLayout(nonIso, dir))
+      PrismaConnector.writeReportsLiteralLayout(Seq(nonIso -> "report"), dir))
     assert(e2.getMessage.contains("yyyy-MM-dd"), e2.getMessage)
     assert(!new java.io.File(s"$dir/_SUCCESS").exists())
+  }
+
+  test("literal layout refuses a report without transaction_date before any IO (wall clock never consulted)") {
+    val parent = Files.createTempDirectory("graft_report_lit_undated")
+    val dir = parent.resolve("reports").toString
+    val dated = Seq(("svc one", 3L, "2024-03-05")).toDF("name", "n_failed", "transaction_date")
+    val undated = Seq(("svc two", 1L)).toDF("name", "n_failed")
+    val e = intercept[IllegalArgumentException](PrismaConnector.writeReportsLiteralLayout(
+      Seq(dated -> "Inventory_Report", undated -> "Alert_Report"), dir))
+    assert(e.getMessage.contains("transaction_date") && e.getMessage.contains("Alert_Report"),
+      e.getMessage)
+    // no root, no staging sibling, no folder stamped with today's date
+    assert(parent.toFile.listFiles().isEmpty,
+      s"a refused publish must write nothing: ${parent.toFile.listFiles().toSeq}")
+  }
+
+  test("multi-report publish: a later report's executor-side failure keeps the committed tree and cleans every staging") {
+    val dir = Files.createTempDirectory("graft_report_lit_multi").toString
+    val alerts = Seq(("acct", 1L, "2024-03-05")).toDF("account", "n", "transaction_date")
+    PrismaConnector.writeReportsLiteralLayout(Seq(
+      Seq(("svc one", 3L, "2024-03-05")).toDF("name", "n_failed", "transaction_date") ->
+        "Inventory_Report",
+      alerts -> "Alert_Report"), dir)
+    val before = tree(dir)
+    assert(before.contains("_SUCCESS"))
+    // report one stages a new tree, then report two fails inside an
+    // executor task: spark.range runs as real tasks, while a raise_error
+    // over a local Seq can fire on the driver while planning, before
+    // report one's staging is left to clean up
+    val boom = spark.range(0, 4, 1, 2).select(
+      when(col("id") === 3, raise_error(lit("executor-side failure")))
+        .otherwise(concat(lit("acct-"), col("id").cast("string"))).as("account"),
+      col("id").as("n"), lit("2024-03-06").as("transaction_date"))
+    val e = intercept[Exception](PrismaConnector.writeReportsLiteralLayout(Seq(
+      Seq(("svc two", 5L, "2024-03-06")).toDF("name", "n_failed", "transaction_date") ->
+        "Inventory_Report",
+      boom -> "Alert_Report"), dir))
+    val msgs = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+      .map(t => Option(t.getMessage).getOrElse("")).toSeq
+    assert(msgs.exists(_.contains("executor-side failure")), msgs.toString)
+    assert(tree(dir) == before, "a failed publish must leave the committed tree byte-identical")
+    val root = new java.io.File(dir)
+    val leftovers = root.getParentFile.listFiles().map(_.getName)
+      .filter(_.startsWith(root.getName + "__"))
+    assert(leftovers.isEmpty, s"staging siblings must not survive a failed publish: ${leftovers.toSeq}")
   }
 
   test("QUOTE_NONNUMERIC sink: null numeric cells render as empty fields, never drop (column counts fixed)") {
@@ -394,22 +436,17 @@ class ConnectorSpec extends AnyFunSuite with SharedSpark {
       ("b", None, Some(0.5), "y", "2024-03-01"),
       ("c", Some(7L), None, "z", "2024-03-01"))
       .toDF("name", "n", "ratio", "note", "transaction_date")
-    PrismaConnector.writeReportQuoteNonNumeric(report, dir)
-    val lines = new java.io.File(dir).listFiles()
-      .filter(_.getName.startsWith("transaction_date="))
-      .flatMap(_.listFiles().filter(f =>
-        f.getName.endsWith(".txt") || f.getName.endsWith(".csv")))
-      .flatMap(f => scala.io.Source.fromFile(f).getLines().toList)
-      .sorted
-    assert(lines.toSeq == Seq(
-      "\"a\",1,2.5,\"x\"",
-      "\"b\",,0.5,\"y\"",
-      "\"c\",7,,\"z\""), s"null numerics must be empty fields: $lines")
-    // every row still parses to the full 4-column schema with nulls intact
-    val back = spark.read
-      .schema("name STRING, n BIGINT, ratio DOUBLE, note STRING")
-      .csv(new java.io.File(dir).listFiles()
-        .filter(_.getName.startsWith("transaction_date=")).head.toString)
+    PrismaConnector.writeReportsLiteralLayout(Seq(report -> "report"), dir)
+    val file = s"$dir/2024/March/1-March-2024/report.csv"
+    val lines = scala.io.Source.fromFile(file).getLines().toList
+    assert(lines.tail.sorted == Seq(
+      "\"a\",1,2.5,\"x\",\"2024-03-01\"",
+      "\"b\",,0.5,\"y\",\"2024-03-01\"",
+      "\"c\",7,,\"z\",\"2024-03-01\""), s"null numerics must be empty fields: $lines")
+    // every row still parses to the full 5-column schema with nulls intact
+    val back = spark.read.option("header", "true")
+      .schema("name STRING, n BIGINT, ratio DOUBLE, note STRING, transaction_date STRING")
+      .csv(file)
     val rows = back.collect().map(r =>
       (r.getString(0), Option(r.get(1)), Option(r.get(2)), r.getString(3))).toSet
     assert(rows == Set(

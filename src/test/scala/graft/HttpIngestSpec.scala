@@ -187,6 +187,14 @@ class HttpIngestSpec extends AnyFunSuite with SharedSpark {
     } finally { server.stop(0); pool.shutdownNow() }
   }
 
+  test("maxRetries < 1 is refused at construction with a clear error (R4)") {
+    // maxRetries counts attempts: 0 would send nothing and leave login()
+    // with no response to read
+    val e = intercept[IllegalArgumentException](new HttpIngest(
+      HttpIngestConfig("http://127.0.0.1:9", "u1", "p1", "id1", maxRetries = 0)).login())
+    assert(e.getMessage.contains("maxRetries"), e.getMessage)
+  }
+
   test("throttle inserts a gap between consecutive requests (R5)") {
     val Fx(server, base, _, _, maxOverlap, pool) = fixture(pageSize = 2, nPages = 3)
     try {

@@ -25,20 +25,6 @@ class MaintenanceSpec extends AnyFunSuite with SharedSpark {
     assert(back.exceptAll(events).isEmpty && events.exceptAll(back).isEmpty)
   }
 
-  test("atomic publish replaces the dataset without exposing partial state") {
-    val target = Files.createTempDirectory("graft_publish").toString + "/table"
-    val v1 = Tables.events(spark, sf).filter(col("event_id") < 100)
-    Maintenance.publishAtomic(v1, target)
-    assert(spark.read.parquet(target).count() == v1.count())
-    val v2 = Tables.events(spark, sf).filter(col("event_id") < 300)
-    Maintenance.publishAtomic(v2, target)
-    assert(spark.read.parquet(target).count() == v2.count())
-    // neither staging nor backup leftovers survive a successful publish
-    val parent = new java.io.File(target).getParentFile
-    assert(!parent.listFiles().exists(f =>
-      f.getName.endsWith(".staging") || f.getName.endsWith(".old")))
-  }
-
   test("compaction codec: zstd output is smaller than snappy on text data") {
     val in = Files.createTempDirectory("graft_codec_in").toString
     val zstdOut = Files.createTempDirectory("graft_codec_z").toString
