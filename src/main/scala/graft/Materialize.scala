@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
 /** Policy point for the eager plan-boundary materializations
@@ -36,4 +37,13 @@ object Materialize {
       case None => df.localCheckpoint(true)
       case Some(lvl) => df.localCheckpoint(true, StorageLevel.fromString(lvl))
     }
+
+  /** Drop the blocks behind a frame [[frame]] returned, once nothing
+    * reads it again. `Dataset.unpersist` does not reach them: a local
+    * checkpoint is an RDD's blocks, not a cached query.
+    */
+  def release(df: DataFrame): Unit = df.queryExecution.analyzed match {
+    case l: LogicalRDD => l.rdd.unpersist(blocking = false)
+    case _ =>
+  }
 }

@@ -31,9 +31,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * 100 TB note: this client is the LANDING step — a bounded,
   * dimension-sized fetch (pages of alerts per policy). The fetched
-  * page payloads feed [[PrismaConnector]] / the DSv2 AlertPages source
-  * unchanged; nothing corpus-scale ever moves through a single HTTP
-  * loop.
+  * page payloads feed [[PrismaConnector]] unchanged; nothing
+  * corpus-scale ever moves through a single HTTP loop. The pageToken
+  * chain is sequential by protocol (each token arrives with the page
+  * before it), so `HttpIngest.fetchPages` is the one fetcher.
   */
 final case class HttpIngestConfig(
     baseUrl: String,
@@ -168,8 +169,7 @@ object HttpIngest {
     * contract): up to `maxRetries` attempts, sleeping
     * backoffBase·2^(attempt-1) between them; returns the final response,
     * whatever its status. `throttle` runs before every attempt — a
-    * retry is a request too. Shared by this client and the DSv2 page
-    * readers, which bring their own client, sleeper and throttle.
+    * retry is a request too.
     */
   def sendWithBackoff(client: HttpClient, req: HttpRequest, maxRetries: Int,
       backoffBaseMs: Long, sleeper: Long => Unit,

@@ -220,16 +220,24 @@ object PrismaConnector {
     * Spark's csv sink quotes all-or-minimal with no per-type mode (and
     * re-quotes delimiter-bearing cells no matter what), so rows render
     * map-side in the exact dialect and go through the TEXT sink; a
-    * per-date header row rides the same shuffle with a sort flag so it
-    * lands first in its file without any extra sort (the
-    * repartition-by-date ordering already satisfies the dynamic sink's
-    * required ordering), and `repartition(col(date))` pins ONE file per
-    * date (the reference's one-object-per-day contract).
+    * per-(date, report) header row rides the same shuffle with a sort
+    * flag so it lands first in its file without any extra sort (the
+    * repartition-by-(date, report) ordering already satisfies the
+    * dynamic sink's required ordering), and repartitioning on
+    * (date, report) pins ONE file per date and report (the reference's
+    * one-object-per-day contract).
     *
-    * The rollback is structural instead of compensating: every report
-    * stages into its own sibling tree first, and only after ALL Spark
-    * jobs succeed does a bounded driver-side rename pass (one same-FS
-    * metadata op per date, no data movement) build the committed tree
+    * One publish is three Spark actions, whatever the report count: the
+    * rendered rows of every report, tagged with the report's index, are
+    * materialized once; one grouped collect over them yields each
+    * report's bad-date count and the date universe together; one write
+    * stages every file. Without the materialization each action would
+    * re-run every report's plan.
+    *
+    * The rollback is structural instead of compensating: all reports
+    * stage into ONE sibling tree first, and only after the Spark write
+    * succeeds does a bounded driver-side rename pass (one same-FS
+    * metadata op per file, no data movement) build the committed tree
     * and mark it with a trailing _SUCCESS — a failure in any report's
     * job leaves the prior committed tree byte-identical (stronger than
     * the reference, which deletes and can crash mid-rollback).
@@ -247,12 +255,15 @@ object PrismaConnector {
     val undated = reports.collect { case (df, name) if !df.columns.contains(part) => name }
     require(undated.isEmpty,
       s"literal layout requires a $part column in every report; missing in: $undated")
+    val spark = reports.head._1.sparkSession
     val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(reports.head._1.sparkSession.sessionState.newHadoopConf())
+      .getFileSystem(spark.sessionState.newHadoopConf())
     val root = new org.apache.hadoop.fs.Path(path)
     val qualRoot = fs.makeQualified(root)
-    val prev = new org.apache.hadoop.fs.Path(qualRoot.getParent,
-      qualRoot.getName + "__prev_literal")
+    def sibling(suffix: String) =
+      new org.apache.hadoop.fs.Path(qualRoot.getParent, qualRoot.getName + suffix)
+    val prev = sibling("__prev_literal")
+    val staging = sibling("__staging_literal")
     // Crash recovery FIRST — even before this run's own input guard
     // (round-13 review), so ANY visit repairs the tree: if a
     // previous publish crashed mid-swap, prev holds the LAST GOOD tree
@@ -268,81 +279,72 @@ object PrismaConnector {
           s"literal-layout crash recovery could not restore $prev to $root")
       }
     }
-    // Fail BEFORE any IO on dates the folder key can't express: a null
-    // (hive would write __HIVE_DEFAULT_PARTITION__) or non-ISO value
-    // has no {yyyy}/{MonthName}/{d} rendering. Bounded check — one
-    // map-side agg per report, no driver-side date parsing of data rows.
-    // try_to_date, not to_date: under Spark 4's default ANSI mode
-    // to_date THROWS CANNOT_PARSE on a malformed string mid-aggregate;
-    // try_to_date yields null so malformed rows are COUNTED and
-    // reported through the same clear require message as nulls.
-    reports.foreach { case (out, name) =>
-      val bad = out.agg(count(when(col(part).isNull ||
-          try_to_date(col(part), "yyyy-MM-dd").isNull, 1)).as("n"))
-        .head().getLong(0)
-      require(bad == 0,
-        s"literal layout requires non-null yyyy-MM-dd $part values; $bad rows of " +
-          s"'$name' violate")
-    }
-    // The date-folder universe is the UNION of every report's dates
-    // (round-14 review): the reference's to_csv always uploads a
-    // header-only file for an empty report, so each date folder carries
-    // ALL the declared file names — a report with no rows on some date
-    // (or no rows at all) publishes a header-only CSV there instead of
-    // silently missing under a fresh _SUCCESS. Bounded collect: a
-    // publish covers a handful of calendar dates by construction.
-    val allDates: Seq[String] = reports.map(_._1.select(col(part)))
-      .reduce(_ unionByName _).distinct().collect().map(_.getString(0)).toSeq
-    require(allDates.nonEmpty,
-      s"every report is empty — no $part anywhere to anchor the literal " +
-        "date-folder layout (the reference would stamp wall clock; here dates " +
-        "are payload-derived, so an all-empty publish is refused)")
-    def stagingPath(i: Int) = new org.apache.hadoop.fs.Path(qualRoot.getParent,
-      qualRoot.getName + s"__staging_literal_$i")
-    // drop stale staging siblings from ANY earlier failed run, including
-    // indices beyond this run's report count
-    Option(fs.globStatus(new org.apache.hadoop.fs.Path(qualRoot.getParent,
-      qualRoot.getName + "__staging_literal_*")))
-      .foreach(_.foreach(st => fs.delete(st.getPath, true)))
-    // Stage-then-swap (round-13 review): each report's Spark job writes
-    // a SIBLING staging tree while the previously committed tree stays
-    // intact — a mid-job failure leaves external consumers the prior
-    // data, not an empty root. Only the bounded driver-side publish
-    // pass below touches the committed tree. The try/finally spans the
-    // STAGING writes too, so a failure in report k's job cleans the
-    // k−1 complete staging trees it leaves behind.
-    val monthFmt = java.time.format.DateTimeFormatter
-      .ofPattern("MMMM", java.util.Locale.ENGLISH)
+    // The reference renders transaction_date as a quoted CSV column
+    // (lambda.py:358,377 assigns the strftime string, to_csv keeps it)
+    // AND uses it as the folder key — so the partition column stays in
+    // header and rows. The report index, not the file name, keys the
+    // staging tree: a name is never escaped into a path.
+    val idx = "report"
+    val rendered = graft.Materialize.frame(reports.zipWithIndex
+      .map { case ((out, _), i) => renderQuoteNonNumeric(out, part).withColumn(idx, lit(i)) }
+      .reduce(_ unionByName _))
     var hadPrev = false
     try {
-      val stagings = reports.zipWithIndex.map { case ((out, name), i) =>
-        val staging = stagingPath(i)
-        // The reference renders transaction_date as a quoted CSV column
-        // (lambda.py:358,377 assigns the strftime string, to_csv keeps
-        // it) AND uses it as the folder key — so the partition column
-        // stays in header and rows.
-        val data = renderQuoteNonNumeric(out, part)
-          .withColumn("__hdr", lit(0))
-        // header rows for EVERY date in the publish (not just this
-        // report's own dates) — the all-files-per-folder contract above
-        val headers = out.sparkSession
-          .createDataset(allDates)(org.apache.spark.sql.Encoders.STRING)
-          .toDF(part)
-          .select(lit(headerLine(out)).as("value"),
-            col(part), lit(1).as("__hdr"))
-        data.unionByName(headers)
-          .repartition(col(part))
-          .sortWithinPartitions(col(part), col("__hdr").desc)
-          .select("value", part)
-          .write.mode("overwrite")
-          .partitionBy(part)
-          .text(staging.toString)
-        (staging, name)
+      // Fail BEFORE any IO on dates the folder key can't express: a null
+      // (hive would write __HIVE_DEFAULT_PARTITION__) or non-ISO value
+      // has no {yyyy}/{MonthName}/{d} rendering. Every bad value groups
+      // under a null date, so the collect is bounded by dates × reports
+      // and no data row is parsed on the driver. try_to_date, not
+      // to_date: under Spark 4's default ANSI mode to_date THROWS
+      // CANNOT_PARSE on a malformed string mid-aggregate; try_to_date
+      // yields null so malformed rows are COUNTED and reported through
+      // the same clear require message as nulls.
+      val groups = rendered
+        .groupBy(col(idx), when(try_to_date(col(part), "yyyy-MM-dd").isNotNull, col(part)))
+        .count().collect()
+      reports.zipWithIndex.foreach { case ((_, name), i) =>
+        val bad = groups.filter(g => g.getInt(0) == i && g.isNullAt(1)).map(_.getLong(2)).sum
+        require(bad == 0,
+          s"literal layout requires non-null yyyy-MM-dd $part values; $bad rows of " +
+            s"'$name' violate")
       }
+      // The date-folder universe is the UNION of every report's dates
+      // (round-14 review): the reference's to_csv always uploads a
+      // header-only file for an empty report, so each date folder carries
+      // ALL the declared file names — a report with no rows on some date
+      // (or no rows at all) publishes a header-only CSV there instead of
+      // silently missing under a fresh _SUCCESS.
+      val allDates = groups.map(_.getString(1)).distinct.toSeq
+      require(allDates.nonEmpty,
+        s"every report is empty — no $part anywhere to anchor the literal " +
+          "date-folder layout (the reference would stamp wall clock; here dates " +
+          "are payload-derived, so an all-empty publish is refused)")
+      // drop stale staging siblings of ANY earlier failed run, including
+      // the numbered per-report trees older publishers left
+      Option(fs.globStatus(sibling("__staging_literal*")))
+        .foreach(_.foreach(st => fs.delete(st.getPath, true)))
+      // Stage-then-swap (round-13 review): the Spark job writes a
+      // SIBLING staging tree while the previously committed tree stays
+      // intact — a mid-job failure leaves external consumers the prior
+      // data, not an empty root. Only the bounded driver-side publish
+      // pass below touches the committed tree. Every report gets a
+      // header row on EVERY date of the publish, not just its own —
+      // the all-files-per-folder contract above.
+      val headers = spark.createDataFrame(for {
+        ((out, _), i) <- reports.zipWithIndex; day <- allDates
+      } yield (headerLine(out), day, i, 1)).toDF("value", part, idx, "__hdr")
+      rendered.withColumn("__hdr", lit(0))
+        .unionByName(headers)
+        .repartition(col(part), col(idx))
+        .sortWithinPartitions(col(part), col(idx), col("__hdr").desc)
+        .select("value", part, idx)
+        .write.mode("overwrite")
+        .partitionBy(part, idx)
+        .text(staging.toString)
       // Publish: rename the old committed tree aside (one metadata op —
       // overwrite semantics: stale dates from the previous run must not
       // survive, and HDFS refuses rename-onto-existing {file}.csv),
-      // build the new tree from every staging, commit with _SUCCESS,
+      // build the new tree from the staging tree, commit with _SUCCESS,
       // then drop the old tree. A crash mid-publish leaves the old tree
       // at <root>__prev_literal — which the recovery block above
       // RESTORES on the next run — and no fresh _SUCCESS over a partial
@@ -350,26 +352,30 @@ object PrismaConnector {
       hadPrev = fs.exists(root)
       if (hadPrev) require(fs.rename(root, prev),
         s"literal-layout publish could not move the previous tree aside: $root")
-      stagings.foreach { case (staging, fileName) =>
-        fs.listStatus(staging).map(_.getPath)
-          .filter(_.getName.startsWith(s"$part=")).foreach { dir =>
-            val day = java.time.LocalDate.parse(dir.getName.stripPrefix(s"$part="))
-            val month = day.format(monthFmt)
-            val dest = new org.apache.hadoop.fs.Path(root,
-              s"${day.getYear}/$month/${day.getDayOfMonth}-$month-${day.getYear}")
-            fs.mkdirs(dest)
-            val parts = fs.listStatus(dir).map(_.getPath)
-              .filter(_.getName.startsWith("part-"))
-            require(parts.length == 1,
-              s"literal layout expects ONE file per date (repartition pinned it); got ${parts.length} in $dir")
-            require(fs.rename(parts.head,
-              new org.apache.hadoop.fs.Path(dest, s"$fileName.csv")),
-              s"literal-layout publish rename failed for $dir")
-          }
+      val monthFmt = java.time.format.DateTimeFormatter
+        .ofPattern("MMMM", java.util.Locale.ENGLISH)
+      def children(dir: org.apache.hadoop.fs.Path, prefix: String) =
+        fs.listStatus(dir).map(_.getPath).filter(_.getName.startsWith(prefix))
+      children(staging, s"$part=").foreach { dateDir =>
+        val day = java.time.LocalDate.parse(dateDir.getName.stripPrefix(s"$part="))
+        val month = day.format(monthFmt)
+        val dest = new org.apache.hadoop.fs.Path(root,
+          s"${day.getYear}/$month/${day.getDayOfMonth}-$month-${day.getYear}")
+        fs.mkdirs(dest)
+        children(dateDir, s"$idx=").foreach { dir =>
+          val fileName = reports(dir.getName.stripPrefix(s"$idx=").toInt)._2
+          val parts = children(dir, "part-")
+          require(parts.length == 1,
+            s"literal layout expects ONE file per date and report (repartition pinned it); got ${parts.length} in $dir")
+          require(fs.rename(parts.head,
+            new org.apache.hadoop.fs.Path(dest, s"$fileName.csv")),
+            s"literal-layout publish rename failed for $dir")
+        }
       }
       fs.create(new org.apache.hadoop.fs.Path(root, "_SUCCESS"), true).close()
-    } finally reports.indices.foreach { i =>
-      fs.delete(stagingPath(i), true) // staging never survives, even a failed run
+    } finally {
+      fs.delete(staging, true) // staging never survives, even a failed run
+      graft.Materialize.release(rendered)
     }
     if (hadPrev) fs.delete(prev, true)
   }

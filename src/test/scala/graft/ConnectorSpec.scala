@@ -207,15 +207,21 @@ class ConnectorSpec extends AnyFunSuite with SharedSpark {
     val dLines = scala.io.Source.fromFile(dec).getLines().toList
     assert(dLines == List("\"name\",\"n_failed\",\"transaction_date\"",
       "\"svc three\",0,\"2024-12-31\""), dLines.toString)
-    // staging (sibling of root, round-13 stage-then-swap) cleaned,
-    // commit marker present
-    assert(!new java.io.File(s"${dir}__staging_literal_0").exists())
+    // no staging or prev sibling of root (round-13 stage-then-swap)
+    // survives, commit marker present
+    val root = new java.io.File(dir)
+    val leftovers = root.getParentFile.listFiles().map(_.getName)
+      .filter(_.startsWith(root.getName + "__"))
+    assert(leftovers.isEmpty, s"no sibling may survive a publish: ${leftovers.toSeq}")
     assert(new java.io.File(s"$dir/_SUCCESS").isFile)
     // rerun = overwrite (round-12 review): a second publish with only
     // ONE of the dates must not fail renaming onto the existing csv
     // and must not leave the stale December date under fresh _SUCCESS
     val rerun = Seq(("svc four", 9L, "2024-03-05"))
       .toDF("name", "n_failed", "transaction_date")
+    // a numbered staging tree an older per-report publisher left after a
+    // crash is swept with the rest
+    assert(new java.io.File(s"${dir}__staging_literal_1/transaction_date=2024-01-01").mkdirs())
     PrismaConnector.writeReportsLiteralLayout(Seq(rerun -> "alert_report"), dir)
     val m2 = scala.io.Source.fromFile(
       s"$dir/2024/March/5-March-2024/alert_report.csv").getLines().toList
@@ -223,8 +229,10 @@ class ConnectorSpec extends AnyFunSuite with SharedSpark {
       "\"svc four\",9,\"2024-03-05\""), m2.toString)
     assert(!new java.io.File(s"$dir/2024/December").exists(),
       "stale dates from the previous run must not survive an overwrite rerun")
-    // the swap's prev-tree is dropped after a successful publish
-    assert(!new java.io.File(s"${dir}__prev_literal").exists())
+    // the swap's prev-tree and every staging tree are dropped after a
+    // successful publish
+    assert(root.getParentFile.listFiles().map(_.getName)
+      .forall(!_.startsWith(root.getName + "__")))
   }
 
   test("composed R25 flow: inventory → fan-out → alert, three CSVs in ONE literal date folder, rollback-equivalent rerun (round 13)") {
@@ -376,6 +384,18 @@ class ConnectorSpec extends AnyFunSuite with SharedSpark {
       PrismaConnector.writeReportsLiteralLayout(Seq(nonIso -> "report"), dir))
     assert(e2.getMessage.contains("yyyy-MM-dd"), e2.getMessage)
     assert(!new java.io.File(s"$dir/_SUCCESS").exists())
+    // several reports validate in one action, and the message still
+    // names the report at fault and its own bad-row count
+    val parent = Files.createTempDirectory("graft_report_lit_bad2")
+    val clean = Seq(("a", "2024-03-05"), ("b", "2024-03-05")).toDF("name", "transaction_date")
+    val second = Seq(("c", Some("2024-03-05")), ("d", None), ("e", None))
+      .toDF("name", "transaction_date")
+    val e3 = intercept[IllegalArgumentException](PrismaConnector.writeReportsLiteralLayout(
+      Seq(clean -> "Inventory_Report", second -> "Alert_Report"),
+      parent.resolve("reports").toString))
+    assert(e3.getMessage.contains("2 rows of 'Alert_Report'"), e3.getMessage)
+    assert(parent.toFile.listFiles().isEmpty,
+      s"a refused publish must write nothing: ${parent.toFile.listFiles().toSeq}")
   }
 
   test("literal layout refuses a report without transaction_date before any IO (wall clock never consulted)") {

@@ -5,7 +5,6 @@ import java.net.InetSocketAddress
 import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import graft.sources.{HttpIngest, HttpIngestConfig, PrismaConnector}
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Live-HTTP ingestion contract (R1–R5) against an in-process
@@ -23,8 +22,8 @@ class HttpIngestSpec extends AnyFunSuite with SharedSpark {
     * request thread pool down (leaked pools accumulate across tests).
     * `maxOverlap` records the highest number of simultaneously
     * IN-FLIGHT alert requests the server observed — the deterministic
-    * way to prove the parallel transport overlaps requests (wall-clock
-    * ratios flake on loaded machines).
+    * way to prove the token-chain client never overlaps requests
+    * (wall-clock ratios flake on loaded machines).
     */
   private case class Fx(server: HttpServer, base: String,
       calls: AtomicInteger, lastAuth: AtomicReference[String],
@@ -34,13 +33,13 @@ class HttpIngestSpec extends AnyFunSuite with SharedSpark {
 
   /** Pages: `nPages` pages of `pageSize` items, the last page SHORT by
     * one (forces exit condition 2); `rateLimitFirst` initial alert
-    * calls (token-chain AND page endpoints) answer 429.
+    * calls answer 429.
     */
   private def fixture(pageSize: Int, nPages: Int, rateLimitFirst: Int = 0,
       latencyMs: Long = 0L): Fx = {
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
-    // a thread pool so the PARALLEL transport can actually overlap
-    // requests (the default executor serializes exchanges), and an
+    // a thread pool so overlapping requests WOULD be served concurrently
+    // (the default executor serializes exchanges), and an
     // injectable per-request latency modeling a real API's RTT
     val pool = java.util.concurrent.Executors.newFixedThreadPool(64)
     server.setExecutor(pool)
@@ -92,34 +91,6 @@ class HttpIngestSpec extends AnyFunSuite with SharedSpark {
         respond(ex, 200,
           s"""{"policyId": "pol-1", "items": $items,
              |  "nextPageToken": "page-${page + 1}"}""".stripMargin)
-      }
-    })
-    // offset-paginated endpoint for the DSv2 parallel-page transport:
-    // applies the requested fields + equality filters SERVER-side and
-    // synthesizes items from the same AlertPages.fieldValue truth the
-    // synthetic reader uses, so the two transports are value-comparable
-    server.createContext("/alerts_page", (ex: HttpExchange) => tracked {
-      import graft.sources.v2.{AlertPages => AP}
-      simulateRtt()
-      alertCalls.incrementAndGet()
-      if (Option(ex.getRequestHeaders.getFirst("x-redlock-auth")).getOrElse("") != Token)
-        respond(ex, 401, """{"message": "no_auth"}""")
-      else if (remaining429.getAndDecrement() > 0) respond(ex, 429, "slow down")
-      else {
-        remaining429.set(0)
-        val b = bodyOf(ex)
-        val page = "\"page\": (\\d+)".r.findFirstMatchIn(b).get.group(1).toInt
-        val limit = "\"limit\": (\\d+)".r.findFirstMatchIn(b).get.group(1).toInt
-        val fields = "\"fields\": \\[([^\\]]*)\\]".r.findFirstMatchIn(b).get.group(1)
-          .split(",").map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty)
-        val eqs = """\{"name": "([^"]+)", "operator": "=", "value": "([^"]+)"\}""".r
-          .findAllMatchIn(b).map(m => (m.group(1), m.group(2))).toSeq
-        val items = (0 until limit).map(i => page.toLong * limit + i)
-          .filter(n => eqs.forall { case (a, v) => AP.fieldValue(a, n) == v })
-          .map(n => fields.map(f => s""""$f": "${AP.fieldValue(f, n)}"""")
-            .mkString("{", ",", "}"))
-          .mkString("[", ",", "]")
-        respond(ex, 200, s"""{"items": $items}""")
       }
     })
     server.start()
@@ -210,46 +181,13 @@ class HttpIngestSpec extends AnyFunSuite with SharedSpark {
     } finally { server.stop(0); pool.shutdownNow() }
   }
 
-  test("DSv2 live transport: parallel page partitions fetch over HTTP with pushdowns applied server-side") {
-    val Fx(server, base, _, _, maxOverlap, pool) = fixture(pageSize = 3, nPages = 2)
-    try {
-      val ing = new HttpIngest(HttpIngestConfig(base, "u1", "p1", "id1"))
-      val tok = ing.login()
-      def live = spark.read.format("graft.sources.v2.AlertPages")
-        .option("pages", "4").option("pageSize", "25")
-        .option("httpBase", base).option("httpToken", tok).load()
-      def synth = spark.read.format("graft.sources.v2.AlertPages")
-        .option("pages", "4").option("pageSize", "25").load()
-      // full scan: the two transports agree row for row (the fixture
-      // server synthesizes from the same fieldValue truth)
-      assert(live.count() == 100)
-      assert(live.exceptAll(synth).isEmpty && synth.exceptAll(live).isEmpty)
-      // pruned + filtered: fields/filters applied SERVER-side, values equal
-      val lf = live.filter(col("cloudType") === "aws")
-        .select("alert_id", "policyId").collect().map(_.toSeq).toSet
-      val sf2 = synth.filter(col("cloudType") === "aws")
-        .select("alert_id", "policyId").collect().map(_.toSeq).toSet
-      assert(lf == sf2 && lf.size == 50)
-      // a bad token surfaces as a task failure, not silent empties
-      val bad = spark.read.format("graft.sources.v2.AlertPages")
-        .option("pages", "1").option("pageSize", "5")
-        .option("httpBase", base).option("httpToken", "nope").load()
-      val e = intercept[Exception](bad.count())
-      assert(e.getMessage.contains("401") ||
-        Option(e.getCause).exists(_.getMessage.contains("401")))
-    } finally { server.stop(0); pool.shutdownNow() }
-  }
-
-  test("parallel page partitions overlap requests; the sequential loop never does") {
+  test("the sequential token-chain loop never overlaps requests and pays every RTT") {
     // The reference's structural ceiling is its SEQUENTIAL loop: one
     // page per round-trip (plus an unconditional 1 s sleep the fixture
-    // charitably omits). The DSv2 transport overlaps pages across
-    // executor threads. Proven via the SERVER-side in-flight counter
-    // (deterministic under load) rather than wall-clock ratios, which
-    // flake when a loaded CI machine pauses the parallel run; timings
-    // stay as info lines. The 100 ms RTT keeps requests in flight long
-    // enough that overlap MUST be observed if it exists.
-    val Fx(server, base, calls, _, maxOverlap, pool) = fixture(pageSize = 20, nPages = 24, latencyMs = 100)
+    // charitably omits). Proven via the SERVER-side in-flight counter
+    // (deterministic under load); the 100 ms RTT keeps each request in
+    // flight long enough that any overlap would be observed.
+    val Fx(server, base, _, _, maxOverlap, pool) = fixture(pageSize = 20, nPages = 24, latencyMs = 100)
     try {
       val ing = new HttpIngest(HttpIngestConfig(base, "u1", "p1", "id1", pageSize = 20))
       val tok = ing.login()
@@ -260,81 +198,7 @@ class HttpIngestSpec extends AnyFunSuite with SharedSpark {
       assert(maxOverlap.get == 1,
         "the token-chain client is request-at-a-time by construction")
       assert(seqMs >= 24 * 100, "sequential must pay every RTT serially")
-      maxOverlap.set(0)
-      val live = spark.read.format("graft.sources.v2.AlertPages")
-        .option("pages", "24").option("pageSize", "20")
-        .option("httpBase", base).option("httpToken", tok).load()
-      val t1 = System.nanoTime()
-      assert(live.count() == 480)
-      val parMs = (System.nanoTime() - t1) / 1e6
-      info(f"sequential token chain: $seqMs%.0f ms; parallel partitions: $parMs%.0f ms " +
-        f"(${seqMs / parMs}%.1fx)")
-      assert(maxOverlap.get >= 2,
-        s"parallel partitions must overlap in-flight requests, observed ${maxOverlap.get}")
     } finally { server.stop(0); pool.shutdownNow() }
-  }
-
-  test("live DSv2 reader retries 429s executor-side on the exact short schedule (R4)") {
-    val Fx(server, base, calls, _, _, pool) = fixture(pageSize = 5, nPages = 1, rateLimitFirst = 3)
-    val origSleeper = graft.sources.v2.AlertHttp.sleeper
-    try {
-      val sleeps = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-      graft.sources.v2.AlertHttp.sleeper = sleeps.add(_)
-      val ing = new HttpIngest(HttpIngestConfig(base, "u1", "p1", "id1"))
-      val tok = ing.login()
-      val live = spark.read.format("graft.sources.v2.AlertPages")
-        .option("pages", "1").option("pageSize", "5")
-        .option("httpBase", base).option("httpToken", tok).load()
-      assert(live.count() == 5, "the page succeeds after backed-off retries")
-      assert(calls.get == 4, "three 429s then the successful fetch — retried in-task, not via task re-run")
-      assert(sleeps.toArray.toSeq == Seq(100L, 200L, 400L),
-        s"executor-side schedule must be base*2^attempt with the 100 ms base, got $sleeps")
-      // exhaustion: more 429s than retries -> the failure surfaces with
-      // the status (Spark task retry is the outer layer, local mode has 1)
-      val Fx(server2, base2, _, _, _, pool2) =
-        fixture(pageSize = 5, nPages = 1, rateLimitFirst = 99)
-      try {
-        val bad = spark.read.format("graft.sources.v2.AlertPages")
-          .option("pages", "1").option("pageSize", "5")
-          .option("httpBase", base2).option("httpToken", tok)
-          .option("httpMaxRetries", "2").load()
-        val e = intercept[Exception](bad.count())
-        val msgs = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
-          .map(t => Option(t.getMessage).getOrElse("")).toSeq
-        assert(msgs.exists(_.contains("429")), s"exhausted retries must surface the 429: $msgs")
-      } finally { server2.stop(0); pool2.shutdownNow() }
-    } finally {
-      graft.sources.v2.AlertHttp.sleeper = origSleeper
-      server.stop(0); pool.shutdownNow()
-    }
-  }
-
-  test("live DSv2 reader enforces the per-JVM min request gap across parallel partitions (R5)") {
-    val Fx(server, base, calls, _, _, pool) = fixture(pageSize = 5, nPages = 1)
-    val origSleeper = graft.sources.v2.AlertHttp.sleeper
-    try {
-      val sleeps = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-      graft.sources.v2.AlertHttp.sleeper = sleeps.add(_)
-      val ing = new HttpIngest(HttpIngestConfig(base, "u1", "p1", "id1"))
-      val tok = ing.login()
-      val live = spark.read.format("graft.sources.v2.AlertPages")
-        .option("pages", "6").option("pageSize", "5")
-        .option("httpBase", base).option("httpToken", tok)
-        .option("httpMinGapMs", "200").load()
-      assert(live.count() == 30)
-      assert(calls.get == 6)
-      // the CAS gate hands each of the 6 concurrent readers a start slot
-      // >= 200 ms after the previous one; with the sleeper recording
-      // instead of sleeping, every reader after the first sees a
-      // positive wait (the gate accumulates 200 ms per claim)
-      val waits = sleeps.toArray(Array.empty[java.lang.Long]).map(_.longValue).sorted
-      assert(waits.length >= 5, s"expected a gap wait for every reader after the first: ${waits.toSeq}")
-      assert(waits.forall(_ > 0) && waits.last >= 200,
-        s"waits must space request starts minGap apart: ${waits.toSeq}")
-    } finally {
-      graft.sources.v2.AlertHttp.sleeper = origSleeper
-      server.stop(0); pool.shutdownNow()
-    }
   }
 
   test("fetched pages land and flow into the schema-declared alertReport") {
