@@ -38,12 +38,13 @@ object Materialize {
       case Some(lvl) => df.localCheckpoint(true, StorageLevel.fromString(lvl))
     }
 
-  /** Drop the blocks behind a frame [[frame]] returned, once nothing
-    * reads it again. `Dataset.unpersist` does not reach them: a local
-    * checkpoint is an RDD's blocks, not a cached query.
+  /** Drop the blocks behind a materialized frame — one [[frame]] or
+    * `localCheckpoint` returned, or a `persist`ed one — once nothing
+    * reads it again. `Dataset.unpersist` does not reach a local
+    * checkpoint's blocks: they are an RDD's blocks, not a cached query.
     */
   def release(df: DataFrame): Unit = df.queryExecution.analyzed match {
     case l: LogicalRDD => l.rdd.unpersist(blocking = false)
-    case _ =>
+    case _ => df.unpersist(blocking = false)
   }
 }

@@ -98,7 +98,7 @@ object LogReg {
           it += 1
         }
         w
-      } finally { docVec.unpersist(); () }
+      } finally graft.Materialize.release(docVec)
     }
   }
 
@@ -140,7 +140,7 @@ object LogReg {
         it += 1
       }
       w
-    } finally pinned.unpersist()
+    } finally graft.Materialize.release(pinned)
   }
 
   /** Margin-broadcast cutoff: ≤4M docs ≈ 64 MB of (doc_id, r) rows —

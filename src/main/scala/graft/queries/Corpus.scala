@@ -82,11 +82,23 @@ object Corpus {
       .groupBy(col("doc_id"), col("bench_id"))
       .agg(count(lit(1)).as("n_common"))
       .join(sizes, "doc_id")
-      .withColumn("overlap", round(col("n_common").cast("double") / col("n_sh"), 4))
-      .filter(col("overlap") >= minOverlap)
+      .transform(overlapping(minOverlap))
       .select(col("doc_id"), col("bench_id"), col("n_common"), col("overlap"))
       .orderBy(col("doc_id"), col("bench_id"))
   }
+
+  /** The decontamination rule over (doc, bench) rows carrying
+    * `n_common` (shared shingles) and `n_sh` (the doc's shingle count):
+    * keep a row whose share, rounded to 4 dp as `overlap`, reaches
+    * `minOverlap`. Shared by [[decontamAgainstShingles]] and the
+    * per-batch flags pass of streaming.IncrementalCorpus, so the two
+    * can never disagree at the boundary.
+    */
+  def overlapping(minOverlap: Double)(pairs: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
+    pairs.withColumn("overlap",
+        round(col("n_common").cast("double") / col("n_sh"), 4))
+      .filter(col("overlap") >= minOverlap)
 
   /** q_ngram_novelty core over any (doc_id, text) frame: per corpus doc
     * (doc_id % 10 != 0), distinct-3-gram count + how many of them the

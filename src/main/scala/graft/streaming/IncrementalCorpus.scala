@@ -1,7 +1,7 @@
 package graft.streaming
 
-import graft.queries.{Corpus, CorpusPipeline}
-import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import graft.queries.{Corpus, CorpusPipeline, Similarity}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Incremental corpus build: the composed q_corpus_build pipeline
@@ -39,6 +39,14 @@ import org.apache.spark.sql.functions._
   * replaying a batch (foreachBatch is at-least-once) recomputes and
   * rewrites identical partitions — a no-op, same contract as
   * [[StreamingDedup]].
+  *
+  * A micro-batch is a few dozen small Spark jobs whose cost is mostly
+  * fixed per job, so [[ingestBatch]] overlaps the ones that share no
+  * store: the band store + pairs, the exact-dup edges + hubs, and the
+  * contamination flags (ONE plan for both screens) + bench stores run
+  * as three concurrent branches, and raw/ lands last, after all three.
+  * [[maintain]] likewise runs its eight per-directory compactions
+  * concurrently.
   *
   * State layout under `base`:
   * {{{
@@ -131,6 +139,19 @@ object IncrementalCorpus {
     * eval/canary suite that new corpus batches are screened against
     * but never enlarge (ScaleSlope's fixedref tier uses this to price
     * the incremental machinery, not the growing-bench fixture).
+    *
+    * After the layout guards, three branches that share no store run
+    * concurrently, each sequential inside:
+    *  - (a) the band store and near-dup pairs ([[StreamingDedup.commitBatch]]);
+    *  - (b) the exact-dup star edges: batch digest minima → pruned hubs
+    *    read → dedges/ → hubs/ append and compaction cadence;
+    *  - (c) the contamination flags (one pass, see [[landFlags]]), then
+    *    bench/ and benchsh/.
+    * raw/ lands only after all three have joined, so a crash or a
+    * failed branch never leaves a raw/ document whose pairs, edges or
+    * flags are missing; a failed branch's error is rethrown once the
+    * others have finished. Every frame this call materializes is
+    * released before it returns.
     */
   def ingestBatch(batch: DataFrame, batchId: Long, base: String,
       threshold: Double = 0.5, minOverlap: Double = 0.3,
@@ -171,22 +192,33 @@ object IncrementalCorpus {
           "as raw/'s per-digest (min doc_id, first batch) rows) before resuming.")
     }
     // one materialization of the arriving docs: feeds the bench split,
-    // the quality gate, and (via commitBatch) signature generation
+    // the quality gate and, through q, every branch. q itself is
+    // map-only over it, so each consumer re-derives it rather than
+    // paying a checkpoint job
     val b = batch.localCheckpoint(true)
-    val benchDelta = b.filter(col("doc_id") % 10 === 0 &&
-        col("doc_id") < benchMaxId)
-      .select(col("doc_id"), col("text"))
-    val q = CorpusPipeline.qualityFilter(b)
-      .withColumn("digest", sha2(lower(trim(col("text"))), 256))
-      .localCheckpoint(true)
+    try {
+      val benchDelta = b.filter(col("doc_id") % 10 === 0 &&
+          col("doc_id") < benchMaxId)
+        .select(col("doc_id"), col("text"))
+      val q = CorpusPipeline.qualityFilter(b)
+        .withColumn("digest", sha2(lower(trim(col("text"))), 256))
+      concurrently(spark, Seq(
+        // near-dup candidate pairs + band store, batch-keyed (train-once
+        // signatures; the band join prunes to buckets the batch touches)
+        () => StreamingDedup.commitBatch(q.drop("digest"), batchId,
+          s"$base/store", s"$base/pairs", threshold, compactEvery = compactEvery),
+        () => landHubEdges(spark, q, batchId, base, hubStore, compactEvery),
+        () => landFlags(spark, q, benchDelta, batchId, base, minOverlap)))
+      BatchStore.land(q, batchId, s"$base/raw")
+    } finally graft.Materialize.release(b)
+  }
 
-    // near-dup candidate pairs + band store, batch-keyed (train-once
-    // signatures; the band join prunes to buckets the batch touches)
-    StreamingDedup.commitBatch(q.drop("digest"), batchId,
-      s"$base/store", s"$base/pairs", threshold, compactEvery = compactEvery)
-
-    // exact-dup connectivity: one star edge per new doc sharing a digest
-    // with an earlier doc or with a batch-mate — linear, ids only.
+  /** Branch (b) of [[ingestBatch]]: exact-dup connectivity — one star
+    * edge per new doc sharing a digest with an earlier doc or with a
+    * batch-mate — linear, ids only.
+    */
+  private def landHubEdges(spark: SparkSession, q: DataFrame, batchId: Long,
+      base: String, hubStore: TieredStore, compactEvery: Int): Unit = {
     // Round 14: the earlier-doc hub comes from the incremental hubs/
     // store (one (digest, hub) row per distinct digest, recorded at the
     // digest's FIRST appearance) instead of a per-batch
@@ -209,52 +241,67 @@ object IncrementalCorpus {
     // bounded by the batch's own distinct-digest count
     val bmin = q.groupBy("digest").agg(min(col("doc_id")).as("bmin"))
       .localCheckpoint(true)
-    // hubs delta = digests this batch INTRODUCES, hubbed at their
-    // batch minimum — replay-idempotent like every other per-batch
-    // write. batchHubs (the restricted earlier-hub rows the pruned
-    // read returns) is checkpointed because both the lookup join and
-    // the delta anti-join read it; the result is bounded by the
-    // batch's own digest count. The first batch (no hubs yet) skips
-    // the whole lookup machinery: every digest is new.
-    val (withHub, hubsDelta) =
-      hubStore.readPruned(spark, batchId, bmin.select(col("digest"))) match {
-        case None =>
-          (q.select(col("doc_id"), col("digest")).join(bmin, "digest")
-            .withColumn("hub", col("bmin")),
-            bmin.select(col("digest"), col("bmin").as("hub")))
-        case Some(restricted) =>
-          val batchHubs = restricted.localCheckpoint(true)
-          (q.select(col("doc_id"), col("digest"))
-            .join(bmin, "digest")
-            .join(broadcast(batchHubs), Seq("digest"), "left")
-            .withColumn("hub", coalesce(col("hub"), col("bmin"))),
-            bmin.select(col("digest"), col("bmin").as("hub"))
-              .join(broadcast(batchHubs.select(col("digest"))),
-                Seq("digest"), "left_anti"))
-      }
-    val dedges = withHub.filter(col("doc_id") =!= col("hub"))
-      .select(col("hub").as("src"), col("doc_id").as("dst"))
-    BatchStore.land(dedges, batchId, s"$base/dedges")
-    // digest-sorted append + the same automatic compaction cadence as
-    // the band store — post-commit, replay- and crash-safe
-    hubStore.append(hubsDelta, batchId)
-    if (compactEvery > 0) hubStore.maybeCompact(spark, compactEvery)
+    try {
+      // hubs delta = digests this batch INTRODUCES, hubbed at their
+      // batch minimum — replay-idempotent like every other per-batch
+      // write. batchHubs (the restricted earlier-hub rows the pruned
+      // read returns) is checkpointed because both the lookup join and
+      // the delta anti-join read it; the result is bounded by the
+      // batch's own digest count. The first batch (no hubs yet) skips
+      // the whole lookup machinery: every digest is new.
+      val batchHubs = hubStore.readPruned(spark, batchId, bmin.select(col("digest")))
+        .map(_.localCheckpoint(true))
+      try {
+        val (withHub, hubsDelta) = batchHubs match {
+          case None =>
+            (q.select(col("doc_id"), col("digest")).join(bmin, "digest")
+              .withColumn("hub", col("bmin")),
+              bmin.select(col("digest"), col("bmin").as("hub")))
+          case Some(hubs) =>
+            (q.select(col("doc_id"), col("digest"))
+              .join(bmin, "digest")
+              .join(broadcast(hubs), Seq("digest"), "left")
+              .withColumn("hub", coalesce(col("hub"), col("bmin"))),
+              bmin.select(col("digest"), col("bmin").as("hub"))
+                .join(broadcast(hubs.select(col("digest"))),
+                  Seq("digest"), "left_anti"))
+        }
+        val dedges = withHub.filter(col("doc_id") =!= col("hub"))
+          .select(col("hub").as("src"), col("doc_id").as("dst"))
+        BatchStore.land(dedges, batchId, s"$base/dedges")
+        // digest-sorted append + the same automatic compaction cadence as
+        // the band store — post-commit, replay- and crash-safe
+        hubStore.append(hubsDelta, batchId)
+        if (compactEvery > 0) hubStore.maybeCompact(spark, compactEvery)
+      } finally batchHubs.foreach(graft.Materialize.release)
+    } finally graft.Materialize.release(bmin)
+  }
 
-    // contamination: new docs vs all benchmark docs so far, and already-
-    // ingested docs vs the batch's new benchmark docs — each a bounded
-    // broadcast-bench shingle join; no (doc, bench) pair scored twice.
-    // The bench side joins as the PERSISTED shingle store (see the state
-    // layout note): only the delta is shingled from text here.
-    val benchShDelta = graft.queries.Similarity.shinglesOf(benchDelta)
+  /** Branch (c) of [[ingestBatch]]: contamination flags, then the
+    * batch's bench/ and benchsh/ rows. The flag set accumulates from
+    * two bounded screens — new docs vs every benchmark doc so far, and
+    * already-ingested docs vs the batch's NEW benchmark docs — so no
+    * (doc, bench) pair is scored twice. Both run as ONE plan: the
+    * corpus side is the batch tagged `is_new` plus, only when the
+    * batch adds benchmark docs, raw/'s earlier docs; the bench side is
+    * the persisted shingle store plus the batch's delta tagged
+    * `is_delta`, broadcast; a shingle match counts when
+    * `is_new || is_delta`. The doc's shingle count rides next to the
+    * explode (the kernel emits a distinct array), and the overlap rule
+    * is [[Corpus.overlapping]], the one q_decontam applies.
+    */
+  private def landFlags(spark: SparkSession, q: DataFrame,
+      benchDelta: DataFrame, batchId: Long, base: String,
+      minOverlap: Double): Unit = {
+    // the bench side joins as the PERSISTED shingle store (see the state
+    // layout note): only the delta is shingled from text here
+    val benchShDelta = Similarity.shinglesOf(benchDelta)
       .select(col("doc_id").as("bench_id"), col("shingle"))
-    val benchShOld = readBefore(spark, s"$base/benchsh", batchId)
-    val benchShSoFar = benchShOld match {
-      case Some(old) => old.unionByName(benchShDelta)
-      case None      => benchShDelta
+    val deltaTagged = benchShDelta.withColumn("is_delta", lit(true))
+    val benchSh = readBefore(spark, s"$base/benchsh", batchId) match {
+      case Some(old) => old.withColumn("is_delta", lit(false)).unionByName(deltaTagged)
+      case None      => deltaTagged
     }
-    val newVsAll = Corpus.decontamAgainstShingles(q.drop("digest"),
-        benchShSoFar, minOverlap)
-      .select(col("doc_id"))
     // the old-corpus rescreen is only owed when this batch actually adds
     // benchmark docs — without the guard every batch would re-shingle the
     // ENTIRE previously-ingested corpus (a full-corpus pass per batch at
@@ -262,18 +309,70 @@ object IncrementalCorpus {
     // is a limit-1 action on the already-checkpointed batch slice.
     // (raw/ is read ONLY on this rare new-bench-docs path since round 14
     // — the per-batch exact-dup lookup reads hubs/ instead.)
-    val rawOld = readBefore(spark, s"$base/raw", batchId)
-    val oldVsNew = rawOld match {
+    val newDocs = q.select(col("doc_id"), col("text"), lit(true).as("is_new"))
+    val corpus = readBefore(spark, s"$base/raw", batchId) match {
       case Some(old) if !benchDelta.isEmpty =>
-        Corpus.decontamAgainst(old.drop("digest"), benchDelta, minOverlap)
-          .select(col("doc_id"))
-      case _ => newVsAll.limit(0)
+        newDocs.unionByName(
+          old.select(col("doc_id"), col("text"), lit(false).as("is_new")))
+      case _ => newDocs
     }
-    val flags = newVsAll.unionByName(oldVsNew).distinct()
+    val flags = corpus
+      .select(col("doc_id"), col("is_new"),
+        graft.functions.TextExprs.tokenShingles(col("text"), 3).as("sh"))
+      .select(col("doc_id"), col("is_new"), size(col("sh")).as("n_sh"),
+        explode(col("sh")).as("shingle"))
+      .join(broadcast(benchSh), "shingle")
+      .filter(col("is_new") || col("is_delta"))
+      .groupBy(col("doc_id"), col("is_new"), col("bench_id"), col("n_sh"))
+      .agg(count(lit(1)).as("n_common"))
+      .transform(Corpus.overlapping(minOverlap))
+      .select(col("doc_id")).distinct()
     BatchStore.land(flags, batchId, s"$base/flags")
     BatchStore.land(benchDelta, batchId, s"$base/bench")
     BatchStore.land(benchShDelta, batchId, s"$base/benchsh")
-    BatchStore.land(q, batchId, s"$base/raw")
+  }
+
+  /** Run `tasks` on threads started here and joined before returning,
+    * at most `min(tasks, defaultParallelism)` at once. Threads created
+    * under the caller inherit its Spark local properties (job group,
+    * scheduler pool, tracing tags); a shared pool's threads would not.
+    * Once a task fails no further task starts; those already running
+    * finish, then the first failure is rethrown, later ones attached as
+    * suppressed. An interrupt of the caller is passed on to the
+    * workers and rethrown only after they have all ended.
+    */
+  private def concurrently(spark: SparkSession, tasks: Seq[() => Unit]): Unit = {
+    val next = new java.util.concurrent.atomic.AtomicInteger(0)
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val workers = Seq.tabulate(
+        math.min(tasks.size, spark.sparkContext.defaultParallelism)) { i =>
+      val t = new Thread(() => {
+        var k = next.getAndIncrement()
+        while (k < tasks.size && failure.get == null) {
+          try tasks(k)()
+          catch {
+            case e: Throwable =>
+              if (!failure.compareAndSet(null, e)) failure.get.addSuppressed(e)
+          }
+          k = next.getAndIncrement()
+        }
+      }, s"graft-incremental-corpus-$i")
+      t.setDaemon(true)
+      t.start()
+      t
+    }
+    var interrupted: Option[InterruptedException] = None
+    workers.foreach { t =>
+      while (t.isAlive)
+        try t.join()
+        catch {
+          case e: InterruptedException if interrupted.isEmpty =>
+            interrupted = Some(e)
+            workers.foreach(_.interrupt())
+          case _: InterruptedException =>
+        }
+    }
+    interrupted.orElse(Option(failure.get)).foreach(e => throw e)
   }
 
   /** The current train-ready corpus: connected components over the
@@ -311,28 +410,32 @@ object IncrementalCorpus {
     * accumulate task-count files per micro-batch forever, and a
     * snapshot opens O(batches × tasks) of them), and fold the two
     * TieredStores' landed append batches into their bucketed tiers.
+    * The eight compactions each touch only their own directories, so
+    * they run concurrently (at most `defaultParallelism` at once, on
+    * threads that inherit the caller's Spark local properties); the
+    * first failure is rethrown once the running ones have finished.
     * Run between batches/snapshots, not concurrently with a commit;
     * crash-safe via the `__prev` protocols; replay of any compacted
     * batch remains a no-op (MaintenanceSpec pins snapshot-before ≡
     * snapshot-after, the listing-count drop, and the replay).
     */
   def maintain(spark: SparkSession, base: String): Unit = {
-    Seq("pairs" -> "doc_a", "dedges" -> "src", "flags" -> "doc_id",
-      "bench" -> "doc_id", "benchsh" -> "shingle", "raw" -> "doc_id")
-      .foreach { case (d, key) =>
-        BatchStore.compact(spark, s"$base/$d", Seq(key))
-      }
     // above-watermark only: replayed compacted batches leave garbage
     // append dirs below it (invisible to reads, but an upTo below the
     // watermark would trip the advance-only clamp)
-    val hubs = hubStoreOf(base)
-    val hubW = hubs.watermark(spark)
-    val hubLanded = hubs.landedBatchIds(spark).filter(_ > hubW)
-    if (hubLanded.nonEmpty) hubs.compact(spark, hubLanded.max)
-    val bands = StreamingDedup.bandStoreOf(s"$base/store")
-    val bandW = bands.watermark(spark)
-    val bandLanded = bands.landedBatchIds(spark).filter(_ > bandW)
-    if (bandLanded.nonEmpty) bands.compact(spark, bandLanded.max)
+    val tiered = Seq(hubStoreOf(base), StreamingDedup.bandStoreOf(s"$base/store"))
+      .map { store => () =>
+        val w = store.watermark(spark)
+        val landed = store.landedBatchIds(spark).filter(_ > w)
+        if (landed.nonEmpty) store.compact(spark, landed.max)
+      }
+    val batchStores = Seq("pairs" -> "doc_a", "dedges" -> "src",
+      "flags" -> "doc_id", "bench" -> "doc_id", "benchsh" -> "shingle",
+      "raw" -> "doc_id")
+      .map { case (d, key) => () =>
+        BatchStore.compact(spark, s"$base/$d", Seq(key)); ()
+      }
+    concurrently(spark, tiered ++ batchStores)
   }
 
   /** Self-contained fixture run (the q_corpus_inc query surface): land

@@ -261,17 +261,20 @@ object StreamingDedup {
     // store write — cut the streaming-source lineage and materialize
     // ONCE (signatures are the batch's expensive map-only work)
     val bands = Similarity.bandedSignaturesOf(batch).localCheckpoint(true)
-    val store =
-      if (prune) bandStore.readPruned(spark, batchId, bands)
-      else bandStore.readAll(spark, batchId)
-    val (pairs, cappedBoundary) = pairsFromBands(bands, store, threshold)
-    BatchStore.land(pairs, batchId, pairsDir)
-    cappedBoundary.unpersist() // dead once the pairs landed
-    // sorted-by-band_hash append (tight row-group stats for the pruned
-    // read's pushed predicates); file count stays at task count — the
-    // bucketed layout is compaction's job
-    bandStore.append(bands, batchId)
-    if (compactEvery > 0) bandStore.maybeCompact(spark, compactEvery)
+    try {
+      val store =
+        if (prune) bandStore.readPruned(spark, batchId, bands)
+        else bandStore.readAll(spark, batchId)
+      val (pairs, cappedBoundary) = pairsFromBands(bands, store, threshold)
+      // the capped boundary is dead once the pairs landed
+      try BatchStore.land(pairs, batchId, pairsDir)
+      finally graft.Materialize.release(cappedBoundary)
+      // sorted-by-band_hash append (tight row-group stats for the pruned
+      // read's pushed predicates); file count stays at task count — the
+      // bucketed layout is compaction's job
+      bandStore.append(bands, batchId)
+      if (compactEvery > 0) bandStore.maybeCompact(spark, compactEvery)
+    } finally graft.Materialize.release(bands)
   }
 
   /** Run the stream: docs under `docsDir` → near-dup pairs landed under
