@@ -16,13 +16,21 @@ import org.apache.spark.storage.StorageLevel
   * stream — at 100 TB that is a real storage-pool commitment, and a
   * lost executor kills the truncated lineage. A cluster deployment
   * sets `spark.graft.materialize.storageLevel` (e.g. DISK_ONLY to keep
-  * the storage pool out of execution memory's way, or swaps the whole
-  * boundary for a reliable checkpoint / cached table — the documented
-  * policy for every localCheckpoint site in this repo, not just the
-  * ones routed through this helper). Local-mode defaults stay
-  * MEMORY_AND_DISK — identical blocks, identical bench behaviour:
-  * the default path calls the same single-arg localCheckpoint as
-  * before.
+  * the storage pool out of execution memory's way), or swaps the whole
+  * boundary for a reliable checkpoint / cached table here. Local-mode
+  * defaults stay MEMORY_AND_DISK — identical blocks, identical bench
+  * behaviour: the default path calls the same single-arg
+  * localCheckpoint as before.
+  *
+  * This is the policy for every localCheckpoint site in `src/main`:
+  * each one calls [[frame]] (MaterializeSpec's source guard keeps it
+  * that way), except three that the storage level does not reach:
+  *   - `Similarity.hotSetOf` checkpoints an `RDD[String]`, not a
+  *     frame, and reads the exact count off the job that fills it;
+  *   - `Similarity.minhashPairsOf` and `charMinhashPairsOf` are
+  *     deliberately LAZY (`localCheckpoint(false)`): the signature frame
+  *     is filled by the first band self-join that reads it, so no extra
+  *     job runs, and an eager [[frame]] would add one.
   */
 object Materialize {
 

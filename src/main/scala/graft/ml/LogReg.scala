@@ -123,7 +123,7 @@ object LogReg {
     // QualityClfSpec pins the large-regime plan shape.
     val bcastMargins = nDocs <= BroadcastMarginDocs
     val pinned =
-      if (bcastMargins) feats.localCheckpoint(true)
+      if (bcastMargins) graft.Materialize.frame(feats)
       else feats.repartition(col("doc_id"))
         .sortWithinPartitions(col("doc_id")).persist()
     try {

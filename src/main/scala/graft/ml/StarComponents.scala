@@ -9,14 +9,16 @@ import org.apache.spark.sql.functions._
   * is two groupBy-join passes over the EDGE list only, converging in
   * O(log² n) rounds with per-round work proportional to |E|.
   *
-  * Complements [[Components.connectedComponents]] (min-label
-  * propagation + pointer jumping, which carries a LABEL table of all
-  * nodes through every round): on a 100-TB dedup graph whose edge list
-  * is much smaller than its node universe — the common case, since most
-  * documents have no near-duplicate — star contraction touches only
-  * nodes that appear in edges. StarComponentsSpec asserts both
-  * algorithms label identically on chains, cliques, forests, and
-  * random graphs.
+  * The engine's one connected-components algorithm: it turns
+  * near-duplicate PAIRS into dedup CLUSTERS ([[dedupClusters]],
+  * q_dedup_clusters, the corpus pipelines). Unlike min-label
+  * propagation, which carries a LABEL table of all nodes through every
+  * round, star contraction touches only nodes that appear in edges — on
+  * a 100-TB dedup graph whose edge list is much smaller than its node
+  * universe (most documents have no near-duplicate) that is the
+  * difference. StarComponentsSpec's driver-side union-find is the
+  * reference: both execution regimes below must label identically to
+  * it on chains, cliques, forests, random graphs and the MinHash pairs.
   *
   * Invariant maintained throughout: every edge (u, v) satisfies u > v
   * ("child points to smaller parent"). At the fixpoint the edge list is
@@ -91,8 +93,8 @@ object StarComponents {
     *                 ([[DriverEdgeLimit]]); 0 forces the distributed
     *                 loop (specs pin parity between the two paths)
     * @return (id, comp) — every node labeled with its component's
-    *         minimum node id (same contract as
-    *         [[Components.connectedComponents]])
+    *         minimum node id (the labeling StarComponentsSpec's
+    *         union-find reference computes)
     */
   def connectedComponents(edges: DataFrame, maxIter: Int = 30,
       validate: Boolean = true,
@@ -100,7 +102,7 @@ object StarComponents {
     val nodesObs = edges.select(col("src").as("id"))
       .union(edges.select(col("dst").as("id"))).distinct()
       .observe("n_nodes", count(lit(1)))
-    val nodes = nodesObs.localCheckpoint(true)
+    val nodes = graft.Materialize.frame(nodesObs)
     val nNodes = nodesObs.queryExecution.observedMetrics("n_nodes").getLong(0)
     // convergence via an order-independent content fingerprint:
     // (count, sum(xxhash64(u,v))) — the hash sum identifies the edge SET,
@@ -117,7 +119,7 @@ object StarComponents {
     def ckWithFingerprint(df: DataFrame): (DataFrame, (Long, BigDecimal)) = {
       val obs = df.observe("fp", count(lit(1)),
         sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)")))
-      val ck = obs.localCheckpoint(true)
+      val ck = graft.Materialize.frame(obs)
       val r = obs.queryExecution.observedMetrics("fp")
       (ck, (r.getLong(0),
         Option(r.getDecimal(1)).map(BigDecimal(_)).getOrElse(BigDecimal(0))))
@@ -201,4 +203,15 @@ object StarComponents {
     nodes.join(e.select(col("u").as("id"), col("v").as("comp")), Seq("id"), "left")
       .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
   }
+
+  /** Dedup clusters from a near-dup pair list: one row per component
+    * with the representative (minimum doc id — also the component
+    * label) and the cluster size. Singleton documents never enter the
+    * pair list and are implicitly kept.
+    */
+  def dedupClusters(pairs: DataFrame, aCol: String, bCol: String): DataFrame =
+    connectedComponents(pairs.select(col(aCol).as("src"), col(bCol).as("dst")))
+      .groupBy(col("comp").as("keep_id"))
+      .agg(count(lit(1)).as("cluster_size"))
+      .orderBy(col("keep_id"))
 }

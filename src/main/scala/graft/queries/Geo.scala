@@ -187,10 +187,9 @@ object Geo {
         // both join sides read one materialization of the narrow binned
         // points (round 15 — uncheckpointed, lhs and rhs each re-ran
         // the events scan + hash-projection)
-        val binned = pts.select(col("event_id"), col("event_type"),
+        val binned = graft.Materialize.frame(pts.select(col("event_id"), col("event_type"),
           col("x"), col("y"),
-          expr(s"x div $PairDist").as("gx"), expr(s"y div $PairDist").as("gy"))
-          .localCheckpoint(true)
+          expr(s"x div $PairDist").as("gx"), expr(s"y div $PairDist").as("gy")))
         val offs = array((-1 to 1).flatMap(i => (-1 to 1).map(j =>
           struct(lit(i.toLong).as("dx"), lit(j.toLong).as("dy")))): _*)
         val lhs = binned.select(col("event_id").as("id_a"),

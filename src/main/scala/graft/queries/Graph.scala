@@ -55,7 +55,7 @@ object Graph {
     */
   private def ckCounted(df: DataFrame): (DataFrame, Long) = {
     val obs = df.observe("n", count(lit(1)))
-    val ck = obs.localCheckpoint(true)
+    val ck = graft.Materialize.frame(obs)
     (ck, obs.queryExecution.observedMetrics("n").getLong(0))
   }
 
@@ -80,13 +80,12 @@ object Graph {
     // remove shuffles outright). wtot is aggregated BEFORE the
     // restriction, so out-of-node-set destinations still dilute their
     // source's rank exactly as the oracle's deg CTE prescribes.
-    val ew = edges.join(
+    val ew = graft.Materialize.frame(edges.join(
         maybeBcast(edges.groupBy(col("src")).agg(sum(col("w")).as("wtot")), n, bcastLimit),
         "src")
       .select(col("src"), col("dst"), col("w"), col("wtot"))
       .join(maybeBcast(nd.select(col("node").as("dst")), n, bcastLimit),
-        Seq("dst"), "left_semi")
-      .localCheckpoint(true)
+        Seq("dst"), "left_semi"))
     val base = Scale / n
     val base15 = (15L * base) / 100L
     var pr = nd.withColumn("pr", lit(base))
@@ -99,14 +98,14 @@ object Graph {
       // rank is node-count rows (the contracted graph) — broadcast it
       // into the edge scan (conditional on BroadcastNodeLimit) so the
       // only shuffle per iteration is the node-keyed contribution agg
-      pr = maybeBcast(pr, n, bcastLimit).join(ew, pr("node") === ew("src"))
-        .selectExpr("dst AS node", "(pr * w) div wtot AS c")
-        .unionByName(zeros)
-        .groupBy(col("node")).agg(sum(col("c")).as("s"))
-        .selectExpr("node", s"${base15}L + ((85 * s) div 100) AS pr")
-        // truncate lineage: 10 chained join+agg rounds would otherwise
-        // compound into one mega-plan (node-count rows only — cheap)
-        .localCheckpoint(true)
+      // truncate lineage: 10 chained join+agg rounds would otherwise
+      // compound into one mega-plan (node-count rows only — cheap)
+      pr = graft.Materialize.frame(
+        maybeBcast(pr, n, bcastLimit).join(ew, pr("node") === ew("src"))
+          .selectExpr("dst AS node", "(pr * w) div wtot AS c")
+          .unionByName(zeros)
+          .groupBy(col("node")).agg(sum(col("c")).as("s"))
+          .selectExpr("node", s"${base15}L + ((85 * s) div 100) AS pr"))
       it += 1
     }
     pr
@@ -182,17 +181,16 @@ object Graph {
     */
   def lpaOf(edges: DataFrame, iterations: Int,
             bcastLimit: Long = BroadcastNodeLimit): DataFrame = {
-    val ew = edges.localCheckpoint(true)
+    val ew = graft.Materialize.frame(edges)
     var (lab, n) = ckCounted(ew.select(col("src").as("node")).distinct()
       .withColumn("label", col("node"))) // node-dimension count rides the ck
     var it = 0
     while (it < iterations) {
       val votes = maybeBcast(lab, n, bcastLimit).join(ew, lab("node") === ew("src"))
         .groupBy(col("dst"), col("label")).agg(sum(col("w")).as("v"))
-      lab = graft.plans.GroupedTopKOp
+      lab = graft.Materialize.frame(graft.plans.GroupedTopKOp
         .topK(votes, 1, Seq("dst"), Seq(("v", true), ("label", false)))
-        .select(col("dst").as("node"), col("label"))
-        .localCheckpoint(true)
+        .select(col("dst").as("node"), col("label")))
       it += 1
     }
     lab.orderBy(col("node"))
@@ -255,7 +253,7 @@ object Graph {
       .groupBy(col("node")).agg(count(lit(1)).as("deg")))
     // deg is node-count rows — broadcast both orientation joins (below
     // the ceiling) so the m-row edge list never shuffles for them
-    val oriented = und
+    val oriented = graft.Materialize.frame(und
       .join(maybeBcast(deg.withColumnRenamed("node", "a").withColumnRenamed("deg", "da"), m, BroadcastNodeLimit), "a")
       .join(maybeBcast(deg.withColumnRenamed("node", "b").withColumnRenamed("deg", "db"), m, BroadcastNodeLimit), "b")
       .select(
@@ -266,8 +264,7 @@ object Graph {
         when(col("da") < col("db") || (col("da") === col("db") && col("a") < col("b")),
           col("da")).otherwise(col("db")).as("du"),
         when(col("da") < col("db") || (col("da") === col("db") && col("a") < col("b")),
-          col("db")).otherwise(col("da")).as("dv"))
-      .localCheckpoint(true)
+          col("db")).otherwise(col("da")).as("dv")))
     // adjacency-intersection count: tri = Σ over oriented edges (u,v)
     // of |N⁺(u) ∩ N⁺(v)| — each triangle a≺b≺c counted exactly once at
     // its (a,b) edge. This never materializes wedge rows (the first-cut
@@ -321,18 +318,18 @@ object Graph {
     // independently at 100 TB.
     QueryDef("q_bfs",
       (s, d) => {
-        val edges = coPurchaseEdges(T.lineitem(s, d))
-          .select(col("src"), col("dst")).localCheckpoint(true)
+        val edges = graft.Materialize.frame(coPurchaseEdges(T.lineitem(s, d))
+          .select(col("src"), col("dst")))
         import s.implicits._
-        var best = Seq((1L, 0)).toDF("node", "hop").localCheckpoint(true)
+        var best = graft.Materialize.frame(Seq((1L, 0)).toDF("node", "hop"))
         var frontier = best.select(col("node"))
         for (h <- 1 to 3) {
-          val next = frontier.join(edges, col("node") === col("src"))
-            .select(col("dst").as("node")).distinct()
-            .join(best.select(col("node").as("seen")),
-              col("node") === col("seen"), "left_anti")
-            .withColumn("hop", lit(h))
-            .localCheckpoint(true)
+          val next = graft.Materialize.frame(
+            frontier.join(edges, col("node") === col("src"))
+              .select(col("dst").as("node")).distinct()
+              .join(best.select(col("node").as("seen")),
+                col("node") === col("seen"), "left_anti")
+              .withColumn("hop", lit(h)))
           // best stays a lazy union of the ≤4 checkpointed hop frames:
           // re-checkpointing the union each hop re-materialized rows
           // that already live in block storage (round 15 — one fewer
@@ -382,10 +379,9 @@ object Graph {
         // three consumers (basket count, item supports, pair explosion)
         // — uncheckpointed, each re-ran the fact-table scan + distinct
         // exchange (round 15: 4 lineitem scans in the before plan)
-        val items = T.lineitem(s, d)
+        val items = graft.Materialize.frame(T.lineitem(s, d)
           .select(col("l_orderkey").as("ok"), col("l_partkey").as("item"))
-          .distinct()
-          .localCheckpoint(true)
+          .distinct())
         val nBaskets = items.select(col("ok")).distinct()
           .agg(count(lit(1)).as("n_baskets"))
         val itemSupp = items.groupBy(col("item")).agg(count(lit(1)).as("n_item"))
@@ -475,10 +471,9 @@ object Graph {
         // materialized once (round 16): both degree-attach broadcast
         // builds consumed deg, each re-running the two-sided union +
         // aggregation over the edge checkpoint (node-dimension rows)
-        val deg = e.select(col("a").as("node"))
+        val deg = graft.Materialize.frame(e.select(col("a").as("node"))
           .union(e.select(col("b").as("node")))
-          .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-          .localCheckpoint(true)
+          .groupBy(col("node")).agg(count(lit(1)).as("deg")))
         val nb = e.select(col("a").as("z"), col("b").as("x"))
           .union(e.select(col("b").as("z"), col("a").as("x")))
         val cand = nb.as("l")

@@ -293,7 +293,7 @@ object Relational {
       (s, d) => {
         val naive = rangeJoinNaive(s, d)
         graft.plans.RewriteRangeJoin.withRule(s) {
-          naive.localCheckpoint(eager = true)
+          graft.Materialize.frame(naive)
         }
       },
       Some(rangeJoinOracle)),

@@ -1205,10 +1205,10 @@ object Similarity {
       None),
     // Pairs → clusters: connected components over the MinHash candidate
     // pairs, one representative (min doc_id) + size per cluster — the
-    // dedup pipeline's final step (ComponentsSpec verifies against a
+    // dedup pipeline's final step (StarComponentsSpec verifies against a
     // driver-side union-find).
     QueryDef("q_dedup_clusters", (s, d) =>
-      graft.ml.Components.dedupClusters(minhashPairs(s, d, 0.5), "doc_a", "doc_b"), None),
+      graft.ml.StarComponents.dedupClusters(minhashPairs(s, d, 0.5), "doc_a", "doc_b"), None),
     // Streaming form of q_dedup_near: fixture docs streamed through the
     // foreachBatch signature accumulator; emitted pair set ≡ the batch
     // path on the same rows (StreamingParitySpec). Engine-hash-specific

@@ -155,7 +155,7 @@ object TextOps {
     // pair-count rows (compact), and an uncheckpointed st re-ran the
     // whole candidate self-join once per direction (round 15 — the
     // before plan's two identical join towers)
-    val st = pairStatsOf(docs, maxDf).localCheckpoint(true)
+    val st = graft.Materialize.frame(pairStatsOf(docs, maxDf))
     val aInB = st.select(col("doc_a").as("doc_in"), col("doc_b").as("doc_of"),
       round(col("n_common").cast("double") / col("n_a"), 4).as("containment"))
     val bInA = st.select(col("doc_b").as("doc_in"), col("doc_a").as("doc_of"),

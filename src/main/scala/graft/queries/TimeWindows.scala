@@ -1307,17 +1307,15 @@ object TimeWindows {
         // the before plan reads events.parquet 12× — guide §7.2
         // duplicated subtrees). Two cheap materializations make the
         // corpus-scale pass run once.
-        val daily = e.join(broadcast(d0))
+        val daily = graft.Materialize.frame(e.join(broadcast(d0))
           .groupBy(col("event_type"),
             datediff(to_date(col("ts")), col("d0")).as("t"))
-          .agg(count(lit(1)).as("x"))
-          .localCheckpoint(true)
+          .agg(count(lit(1)).as("x")))
         val st = daily.groupBy(col("event_type"))
           .agg(count(lit(1)).as("n"), sum(col("x")).as("ss"))
-        val dev = daily.join(broadcast(st), "event_type")
+        val dev = graft.Materialize.frame(daily.join(broadcast(st), "event_type")
           .select(col("event_type"), col("t"),
-            (col("n") * col("x") - col("ss")).as("dx"))
-          .localCheckpoint(true)
+            (col("n") * col("x") - col("ss")).as("dx")))
         val den = dev.groupBy(col("event_type"))
           .agg(sum(col("dx") * col("dx")).as("den"))
         val lags = Seq(1, 7).toDF("lag")

@@ -273,13 +273,12 @@ object Udx {
       o.filter(col("o_orderkey") % 2 === 1)
         .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
         .write.mode("overwrite").parquet(v2)
-      reader(s, v1, v2)
+      graft.Materialize.frame(reader(s, v1, v2)
         .groupBy(coalesce(col("o_orderpriority"), lit("(pre-evolution)"))
           .as("priority"))
         .agg(count(lit(1)).as("n"),
           round(sum(col("o_totalprice")), 4).as("total"))
-        .orderBy(col("priority"))
-        .localCheckpoint(true)
+        .orderBy(col("priority")))
     } finally {
       import scala.util.Try
       val walk = java.nio.file.Files.walk(base)

@@ -50,7 +50,7 @@ object IvfIndex {
       k: Int = Similarity.IvfCentroids): Unit = {
     val spark = embeddings.sparkSession
     val (assigned, cents) = Similarity.ivfAssignOf(embeddings, k)
-    val pinned = assigned.localCheckpoint(true) // one assignment feeds both writes
+    val pinned = graft.Materialize.frame(assigned) // one assignment feeds both writes
     pinned.select(col("vec_id"), col("emb"), col("cid"))
       .write.mode("overwrite").partitionBy("cid").parquet(s"$path/lists")
     import spark.implicits._
@@ -117,11 +117,11 @@ object IvfIndex {
     val cents: Array[Array[Double]] =
       spark.read.parquet(s"$path/centroids").orderBy(col("cid")).collect()
         .map(_.getSeq[Double](1).toArray)
-    val assigned = Similarity.corpusOf(batch)
+    // pin one routing for the stats AND the write
+    val assigned = graft.Materialize.frame(Similarity.corpusOf(batch)
       .withColumn("dots", Similarity.centroidScores(col("emb"), cents))
       .withColumn("cid",
-        expr("array_position(dots, array_max(dots)) - 1").cast("int"))
-      .localCheckpoint(true) // pin one routing for the stats AND the write
+        expr("array_position(dots, array_max(dots)) - 1").cast("int")))
     val agg = assigned.agg(count(lit(1)), avg(routingResidual)).head()
     val n = agg.getLong(0)
     val meanRes = if (n == 0) 0.0 else agg.getDouble(1)
@@ -139,9 +139,9 @@ object IvfIndex {
     * [[AppendStats.retrainAdvised]].
     */
   def retrain(spark: SparkSession, path: String): Unit = {
-    val all = allListRows(spark, path)
-      .select(col("vec_id"), col("emb").as("embedding"))
-      .localCheckpoint(true) // we rewrite the dirs this frame reads
+    // we rewrite the dirs this frame reads
+    val all = graft.Materialize.frame(allListRows(spark, path)
+      .select(col("vec_id"), col("emb").as("embedding")))
     build(all, path, Similarity.adaptiveCentroids(all.count()))
     val delta = new org.apache.hadoop.fs.Path(s"$path/delta")
     val fs = delta.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -287,15 +287,14 @@ object IvfIndex {
     // a pruned-out list. localCheckpoint additionally pins ONE routing
     // result for both consumers (and stops the scoring pipeline from
     // running twice).
-    val routed = probes
+    val routed = graft.Materialize.frame(probes
       .select(col("probe_id"), col("p_emb"),
         posexplode(Similarity.centroidScores(col("p_emb"), cents)))
       .withColumnRenamed("pos", "p_cid").withColumnRenamed("col", "p_dot")
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("probe_id")).orderBy(col("p_dot").desc, col("p_cid"))))
       .filter(col("rk") <= nprobe)
-      .select(col("probe_id"), col("p_emb"), col("p_cid"))
-      .localCheckpoint(true)
+      .select(col("probe_id"), col("p_emb"), col("p_cid")))
     // the union of lists any probe needs — tiny driver-side set
     // (≤ nprobe × n_probes ids), which makes the scan prunable
     val neededCids = routed.select(col("p_cid")).distinct()

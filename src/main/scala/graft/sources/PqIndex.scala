@@ -118,7 +118,7 @@ object PqIndex {
     val n = Similarity.corpusOf(embeddings).count()
     val lists = Similarity.adaptiveCentroids(n)
     val (assigned, coarse) = Similarity.ivfAssignOf(embeddings, lists)
-    val residuals = residualsOf(assigned, coarse).localCheckpoint(true)
+    val residuals = graft.Materialize.frame(residualsOf(assigned, coarse))
     val books = train(residuals)
     encode(residuals, books)
       .write.mode("overwrite").parquet(s"$path/codes")
@@ -186,7 +186,7 @@ object PqIndex {
       .withColumn("dots", Similarity.centroidScores(col("emb"), coarse))
       .withColumn("cid",
         expr("array_position(dots, array_max(dots)) - 1").cast("int"))
-    val res = residualsOf(assigned, coarse).localCheckpoint(true)
+    val res = graft.Materialize.frame(residualsOf(assigned, coarse))
     val agg = res.agg(count(lit(1)), avg(resNorm)).head()
     val n = agg.getLong(0)
     val meanRes = if (n == 0) 0.0 else agg.getDouble(1)

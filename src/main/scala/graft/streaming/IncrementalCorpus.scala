@@ -195,7 +195,7 @@ object IncrementalCorpus {
     // the quality gate and, through q, every branch. q itself is
     // map-only over it, so each consumer re-derives it rather than
     // paying a checkpoint job
-    val b = batch.localCheckpoint(true)
+    val b = graft.Materialize.frame(batch)
     try {
       val benchDelta = b.filter(col("doc_id") % 10 === 0 &&
           col("doc_id") < benchMaxId)
@@ -239,8 +239,8 @@ object IncrementalCorpus {
     // materialized ONCE: the batch's (digest → min doc_id) rows feed
     // the pruned read's probe, the hub lookup join, and the delta —
     // bounded by the batch's own distinct-digest count
-    val bmin = q.groupBy("digest").agg(min(col("doc_id")).as("bmin"))
-      .localCheckpoint(true)
+    val bmin = graft.Materialize.frame(
+      q.groupBy("digest").agg(min(col("doc_id")).as("bmin")))
     try {
       // hubs delta = digests this batch INTRODUCES, hubbed at their
       // batch minimum — replay-idempotent like every other per-batch
@@ -250,7 +250,7 @@ object IncrementalCorpus {
       // batch's own digest count. The first batch (no hubs yet) skips
       // the whole lookup machinery: every digest is new.
       val batchHubs = hubStore.readPruned(spark, batchId, bmin.select(col("digest")))
-        .map(_.localCheckpoint(true))
+        .map(graft.Materialize.frame)
       try {
         val (withHub, hubsDelta) = batchHubs match {
           case None =>

@@ -45,7 +45,7 @@ abstract class IncrementalOperator(val rowSchema: StructType,
     * re-scanned by the parquet writer's retry path otherwise.
     */
   def commitBatch(batch: DataFrame, batchId: Long, storeDir: String): Unit =
-    BatchStore.land(rowsOf(batch).localCheckpoint(true), batchId, storeDir)
+    BatchStore.land(graft.Materialize.frame(rowsOf(batch)), batchId, storeDir)
 
   /** All accumulated rows, deduped on `dedupKeys`; an absent store reads
     * as zero rows. Crash-window-safe: resolves a mid-maintenance

@@ -31,7 +31,7 @@ object StreamFixture {
         }
         .start()
       try q.processAllAvailable() finally q.stop()
-      result(s"$tmp/state").localCheckpoint(true)
+      graft.Materialize.frame(result(s"$tmp/state"))
     } finally deleteTree(tmp)
   }
 

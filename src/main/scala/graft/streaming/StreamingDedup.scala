@@ -260,7 +260,7 @@ object StreamingDedup {
     // band rows feed the touched-hash collect, the pair join, AND the
     // store write — cut the streaming-source lineage and materialize
     // ONCE (signatures are the batch's expensive map-only work)
-    val bands = Similarity.bandedSignaturesOf(batch).localCheckpoint(true)
+    val bands = graft.Materialize.frame(Similarity.bandedSignaturesOf(batch))
     try {
       val store =
         if (prune) bandStore.readPruned(spark, batchId, bands)

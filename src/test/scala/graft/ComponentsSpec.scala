@@ -1,39 +1,26 @@
 package graft
 
-import graft.ml.Components
+import graft.ml.StarComponents
 import graft.queries.Similarity
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Connected components vs a driver-side union-find reference, plus the
-  * dedup-cluster composition over MinHash pairs.
+/** Connected components (`StarComponents`, the one algorithm) vs a
+  * driver-side union-find reference, plus the dedup-cluster composition
+  * over MinHash pairs.
   */
 class ComponentsSpec extends AnyFunSuite with SharedSpark {
   import spark.implicits._
-
-  /** Reference union-find. */
-  private def ufComponents(edges: Seq[(Long, Long)]): Map[Long, Long] = {
-    val parent = scala.collection.mutable.Map[Long, Long]()
-    def find(x: Long): Long = {
-      val p = parent.getOrElseUpdate(x, x)
-      if (p == x) x else { val r = find(p); parent(x) = r; r }
-    }
-    edges.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-    }
-    parent.keys.map(k => k -> find(k)).toMap
-  }
+  import ComponentsSpec.ufComponents
 
   private def run(edges: Seq[(Long, Long)]): Map[Long, Long] =
-    Components.connectedComponents(edges.toDF("src", "dst"))
+    StarComponents.connectedComponents(edges.toDF("src", "dst"))
       .as[(Long, Long)].collect().toMap
 
   test("empty edge list yields an empty labeling (clean corpus: no near-dup pairs)") {
-    val labels = Components.connectedComponents(
+    val labels = StarComponents.connectedComponents(
       Seq.empty[(Long, Long)].toDF("src", "dst"))
     assert(labels.isEmpty)
-    val clusters = Components.dedupClusters(
+    val clusters = StarComponents.dedupClusters(
       Seq.empty[(Long, Long)].toDF("a", "b"), "a", "b")
     assert(clusters.isEmpty)
   }
@@ -50,11 +37,14 @@ class ComponentsSpec extends AnyFunSuite with SharedSpark {
 
   test("long path converges within O(log n) rounds (diameter stress)") {
     // a 64-node chain has diameter 63: plain min-label propagation would
-    // need 63 rounds and blow the maxIter=20 budget; pointer jumping
-    // must collapse it within the budget
+    // need 63 rounds; the distributed star-contraction loop (forced with
+    // driverEdgeLimit = 0) must collapse it within its maxIter budget
     val path = (0L until 63L).map(i => (i, i + 1))
-    val got = run(path)
-    assert(got.values.toSet == Set(0L), s"path must collapse to comp 0: $got")
+    val got = StarComponents.connectedComponents(path.toDF("src", "dst"),
+        maxIter = 20, driverEdgeLimit = 0L)
+      .as[(Long, Long)].collect().toMap
+    assert(got.size == 64 && got.values.toSet == Set(0L),
+      s"path must collapse to comp 0: $got")
   }
 
   test("disjoint cliques stay separate components")  {
@@ -68,7 +58,7 @@ class ComponentsSpec extends AnyFunSuite with SharedSpark {
     val pairs = Similarity.minhashPairs(spark, sf, 0.5)
     val pairRows = pairs.select("doc_a", "doc_b").as[(Long, Long)].collect().toSeq
     assume(pairRows.nonEmpty, "fixture should contain near-dup pairs")
-    val clusters = graft.ml.Components.dedupClusters(pairs, "doc_a", "doc_b")
+    val clusters = StarComponents.dedupClusters(pairs, "doc_a", "doc_b")
       .as[(Long, Long)].collect().toSeq
     val want = ufComponents(pairRows)
     val wantSizes = want.groupBy(_._2).map { case (c, m) => c -> m.size.toLong }
@@ -76,5 +66,43 @@ class ComponentsSpec extends AnyFunSuite with SharedSpark {
       s"cluster (rep, size) must match union-find: got $clusters want $wantSizes")
     // every clustered doc appears exactly once across clusters
     assert(clusters.map(_._2).sum == want.size)
+  }
+}
+
+/** Driver-side references, independent of the engine; every node maps to
+  * its component's minimum id. StarComponentsSpec uses them too.
+  */
+object ComponentsSpec {
+
+  /** Reference union-find. */
+  def ufComponents(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(k => k -> find(k)).toMap
+  }
+
+  /** Reference min-label propagation: every node takes the least label
+    * across its edges until no label changes.
+    */
+  def minLabelComponents(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val label = scala.collection.mutable.Map[Long, Long]()
+    edges.foreach { case (a, b) => label(a) = a; label(b) = b }
+    var changed = true
+    while (changed) {
+      changed = false
+      edges.foreach { case (a, b) =>
+        val m = math.min(label(a), label(b))
+        if (label(a) != m) { label(a) = m; changed = true }
+        if (label(b) != m) { label(b) = m; changed = true }
+      }
+    }
+    label.toMap
   }
 }

@@ -2,19 +2,18 @@ package graft
 
 import java.nio.file.Files
 
-import graft.sources.Maintenance
-import graft.streaming.StreamOps
+import graft.streaming.{BatchStore, StreamOps}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end incremental pipeline: a file-source stream maintains a
-  * per-user aggregate table across micro-batches with foreachBatch —
-  * merge the batch delta into the running state, publish each snapshot
-  * through the versioned pointer flip — and the final published table
-  * must equal the one-shot batch aggregate over all input. This is the
-  * "incremental materialized view" composition of the engine's pieces:
-  * streaming source + aggregation + versioned publish + pointer reads.
+  * per-user aggregate across micro-batches with foreachBatch — each
+  * batch's delta lands as its own `batch_id` partition through
+  * [[BatchStore.land]], and the sum of the landed deltas must equal the
+  * one-shot batch aggregate over all input. This is the "incremental
+  * materialized view" composition of the engine's pieces: streaming
+  * source + aggregation + the batch-store protocol + an additive read.
   */
 class IncrementalPipelineSpec extends AnyFunSuite with SharedSpark {
   import spark.implicits._
@@ -23,13 +22,7 @@ class IncrementalPipelineSpec extends AnyFunSuite with SharedSpark {
     df.groupBy("user_id").agg(
       count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
 
-  /** Additive merge of two (user_id, n, sum_value) states. */
-  private def merge(state: DataFrame, delta: DataFrame): DataFrame =
-    state.unionByName(delta)
-      .groupBy("user_id").agg(
-        sum(col("n")).as("n"), sum(col("sum_value")).as("sum_value"))
-
-  test("foreachBatch maintains a versioned per-user aggregate equal to the batch answer") {
+  test("foreachBatch incremental aggregate ≡ one-shot batch aggregate") {
     val in = Files.createTempDirectory("graft_inc_in").toString
     val ck = Files.createTempDirectory("graft_inc_ck").toString
     val store = Files.createTempDirectory("graft_inc_store").toString + "/user_stats"
@@ -48,22 +41,23 @@ class IncrementalPipelineSpec extends AnyFunSuite with SharedSpark {
     val q = StreamOps.eventsStream(spark, in, schema, maxFilesPerTrigger = 1)
       .writeStream
       .option("checkpointLocation", ck)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        val delta = aggDelta(batch)
-        val next =
-          try merge(Maintenance.readCurrent(batch.sparkSession, store), delta)
-          catch { case _: IllegalArgumentException => delta } // first publish
-        Maintenance.publishVersioned(next, store)
-        ()
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
+        BatchStore.land(aggDelta(batch), batchId, store)
       }
       .start()
     try q.processAllAvailable() finally q.stop()
 
-    val got = Maintenance.readCurrent(spark, store)
+    // additive state: the per-user sums over every landed delta
+    val landed = BatchStore.read(spark, store)
+    assert(landed.isDefined, s"no batch landed under $store")
+    val got = landed.get
+      .groupBy("user_id").agg(
+        sum(col("n")).as("n"), sum(col("sum_value")).as("sum_value"))
       .orderBy("user_id").as[(Long, Long, Double)].collect().toSeq
     val want = aggDelta(spark.read.parquet(in))
       .orderBy("user_id").as[(Long, Long, Double)].collect().toSeq
     assert(got == want, s"incremental state must equal the batch aggregate: $got vs $want")
     assert(got == Seq((1L, 3L, 9.0), (2L, 1L, 2.0), (3L, 1L, 4.0)))
+    assert(BatchStore.landedIds(spark, store).sorted == Seq(0L, 1L, 2L))
   }
 }

@@ -12,32 +12,6 @@ class MaintenanceSpec extends AnyFunSuite with SharedSpark {
   private def parquetFiles(dir: String): Array[java.io.File] =
     new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
 
-  test("compaction collapses many small files into few clustered ones, rows intact") {
-    val in = Files.createTempDirectory("graft_smallfiles").toString
-    val out = Files.createTempDirectory("graft_compacted").toString
-    val events = Tables.events(spark, sf)
-    events.repartition(40).write.mode("overwrite").parquet(in)
-    assert(parquetFiles(in).length == 40)
-    Maintenance.compactParquet(spark, in, out, Seq("user_id", "ts"), targetFiles = 4)
-    assert(parquetFiles(out).length <= 4)
-    val back = spark.read.parquet(out)
-    assert(back.count() == events.count())
-    assert(back.exceptAll(events).isEmpty && events.exceptAll(back).isEmpty)
-  }
-
-  test("compaction codec: zstd output is smaller than snappy on text data") {
-    val in = Files.createTempDirectory("graft_codec_in").toString
-    val zstdOut = Files.createTempDirectory("graft_codec_z").toString
-    val snapOut = Files.createTempDirectory("graft_codec_s").toString
-    Tables.documents(spark, sf).write.mode("overwrite").parquet(in)
-    Maintenance.compactParquet(spark, in, zstdOut, Seq("doc_id"), 2, codec = "zstd")
-    Maintenance.compactParquet(spark, in, snapOut, Seq("doc_id"), 2, codec = "snappy")
-    def bytes(dir: String): Long = parquetFiles(dir).map(_.length()).sum
-    assert(bytes(zstdOut) < bytes(snapOut),
-      s"zstd ${bytes(zstdOut)} should beat snappy ${bytes(snapOut)} on text")
-    assert(spark.read.parquet(zstdOut).count() == Tables.documents(spark, sf).count())
-  }
-
   test("schema evolution: mergeSchema reads old and new file generations as one table") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_evolve").toString
@@ -51,96 +25,6 @@ class MaintenanceSpec extends AnyFunSuite with SharedSpark {
       .select("id", "tag").as[(Long, Option[String])].collect().toSeq
     // old-generation rows surface the new column as NULL
     assert(rows == Seq((1L, None), (2L, None), (3L, Some("x"))))
-  }
-
-  test("zorder2 kernel: correct bit interleave, distinct and sign-ordered") {
-    import graft.functions.ClusterKernels.interleaveBits
-    // independent reference for small non-negatives: interleave low bits,
-    // plus the constant from both sign-flip bits (bit 62 from a's sign
-    // region; the b-side bit 63 is flipped back for signed comparison)
-    def ref(a: Int, b: Int): Long = {
-      var r = 0L
-      for (i <- 0 until 8) {
-        r |= ((a >> i) & 1L) << (2 * i)
-        r |= ((b >> i) & 1L) << (2 * i + 1)
-      }
-      r | (1L << 62)
-    }
-    for (a <- 0 until 8; b <- 0 until 8)
-      assert(interleaveBits(a, b) == ref(a, b), s"($a,$b)")
-    val grid = for (a <- -4 to 4; b <- -4 to 4) yield interleaveBits(a, b)
-    assert(grid.distinct.size == grid.size, "z-values must be injective")
-    // signed order: any negative dim sorts before the all-non-negative block
-    assert(interleaveBits(-1, 5) < interleaveBits(0, 0))
-    assert(interleaveBits(5, -1) < interleaveBits(0, 0))
-  }
-
-  test("z-order compaction keeps per-file ranges tight on BOTH dimensions") {
-    import spark.implicits._
-    val in = Files.createTempDirectory("graft_z_in").toString
-    val zOut = Files.createTempDirectory("graft_z_out").toString
-    val xOut = Files.createTempDirectory("graft_x_out").toString
-    // 100×100 grid, shuffled on disk
-    (0 until 10000).map(i => (i % 100, i / 100)).toDF("x", "y")
-      .orderBy(hash(col("x"), col("y"))).coalesce(4)
-      .write.mode("overwrite").parquet(in)
-    Maintenance.compactParquetZOrder(spark, in, zOut, "x", "y", targetFiles = 16)
-    Maintenance.compactParquet(spark, in, xOut, Seq("x"), targetFiles = 16)
-    def avgSpans(dir: String): (Double, Double) = {
-      val spans = parquetFiles(dir).map { f =>
-        val r = spark.read.parquet(f.toString)
-          .agg(max("x") - min("x"), max("y") - min("y")).head()
-        (r.getInt(0), r.getInt(1))
-      }
-      (spans.map(_._1).sum.toDouble / spans.length,
-        spans.map(_._2).sum.toDouble / spans.length)
-    }
-    val (zx, zy) = avgSpans(zOut)
-    val (_, xy) = avgSpans(xOut)
-    // x-sorted files are degenerate on y (span ≈ 99); z-ordered files
-    // must stay prunable on BOTH dimensions
-    assert(xy > 90, s"x-sorted baseline should span all of y, got $xy")
-    assert(zx < 60 && zy < 60, s"z-order spans too wide: x=$zx y=$zy")
-    assert(spark.read.parquet(zOut).count() == 10000)
-    assert(spark.read.parquet(zOut).exceptAll(spark.read.parquet(in)).isEmpty)
-  }
-
-  test("versioned publish: readers resolve complete snapshots through the pointer") {
-    val base = Files.createTempDirectory("graft_versioned").toString + "/table"
-    val v1 = Tables.events(spark, sf).filter(col("event_id") < 100)
-    val dir1 = Maintenance.publishVersioned(v1, base, keepVersions = 2)
-    assert(dir1.endsWith("v=000001"))
-    assert(Maintenance.readCurrent(spark, base).count() == v1.count())
-    val v2 = Tables.events(spark, sf).filter(col("event_id") < 300)
-    Maintenance.publishVersioned(v2, base, keepVersions = 2)
-    assert(Maintenance.readCurrent(spark, base).count() == v2.count())
-    // keepVersions=2: v1 retained for in-flight readers, then pruned on v3
-    val names = () => new java.io.File(base).listFiles().map(_.getName).toSet
-    assert(names().contains("v=000001") && names().contains("v=000002"))
-    Maintenance.publishVersioned(v1, base, keepVersions = 2)
-    assert(!names().contains("v=000001"), "old versions must be pruned past keepVersions")
-    assert(names().contains("v=000002") && names().contains("v=000003"))
-    assert(!names().contains("_CURRENT.tmp"), "pointer temp must not survive")
-  }
-
-  test("versioned publish: a crash before the pointer flip leaves the old snapshot live") {
-    val base = Files.createTempDirectory("graft_versioned_crash").toString + "/table"
-    val v1 = Tables.events(spark, sf).filter(col("event_id") < 100)
-    Maintenance.publishVersioned(v1, base)
-    // simulate a writer dying AFTER landing its version dir but BEFORE
-    // the pointer flip: the orphan dir must not become visible
-    val v2 = Tables.events(spark, sf).filter(col("event_id") < 300)
-    v2.write.parquet(s"$base/v=000002")
-    assert(Maintenance.readCurrent(spark, base).count() == v1.count(),
-      "an unflipped version must stay invisible to readers")
-    // the next real publish claims the next number and flips past the orphan
-    Maintenance.publishVersioned(v2, base)
-    assert(Maintenance.readCurrent(spark, base).count() == v2.count())
-    // the snapshot readers were just on (v=000001) must survive the
-    // prune even though the orphan crowded the newest-K window
-    val names = new java.io.File(base).listFiles().map(_.getName).toSet
-    assert(names.contains("v=000001"),
-      s"pre-flip published snapshot must not be pruned, dirs: $names")
   }
 
   test("upsert replaces matched keys, inserts new ones, passes the rest through") {

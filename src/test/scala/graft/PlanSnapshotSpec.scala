@@ -57,7 +57,9 @@ class PlanSnapshotSpec extends AnyFunSuite with SharedSpark {
         .replaceAll("plan_id=\\d+", "plan_id=x")
         .replaceAll("RDD\\[\\d+\\]", "RDD[x]") // session-global RDD id counter
         .replaceAll("Lambda\\$\\d+/0x[0-9a-f]+", "Lambda\\$x") // JIT class name
-        .replaceAll("@[0-9a-fA-F]{6,}", "@x") // JVM identity hash
+        // JVM identity hash: a 31-bit int in hex without leading zeros,
+        // so 1 to 8 digits (a 5-digit one escaped the old {6,} bound)
+        .replaceAll("@[0-9a-fA-F]+", "@x")
         .replaceAll("lambda ([a-z]+)_\\d+", "lambda $1_n") // session-global HOF var counter
         .replaceAll("0[xX][0-9A-Fa-f]{32,}", "0x<bin>") // embedded sketch/binary literals
         .replaceAll("Location: \\S+ \\[[^\\]]*\\]", "Location: <path>")

@@ -1,15 +1,16 @@
 package graft
 
-import graft.ml.{Components, StarComponents}
+import graft.ml.StarComponents
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Large-star/small-star contraction must produce the identical
-  * labeling as min-label propagation on every graph shape — two
-  * independent algorithms agreeing is the correctness argument for
-  * both (plus the union-find reference in ComponentsSpec).
+/** Large-star/small-star contraction must produce the labeling the
+  * driver-side references in [[ComponentsSpec]] (union-find and
+  * min-label propagation) compute on every graph shape, in both its
+  * execution regimes.
   */
 class StarComponentsSpec extends AnyFunSuite with SharedSpark {
   import spark.implicits._
+  import ComponentsSpec.{minLabelComponents, ufComponents}
 
   /** Runs BOTH execution regimes — the driver union-find fast path
     * (default, every fixture here is under the edge ceiling) and the
@@ -27,10 +28,6 @@ class StarComponentsSpec extends AnyFunSuite with SharedSpark {
       s"driver union-find and star contraction disagree: $fast vs $loop")
     fast
   }
-
-  private def prop(edges: Seq[(Long, Long)]): Map[Long, Long] =
-    Components.connectedComponents(edges.toDF("src", "dst"))
-      .as[(Long, Long)].collect().toMap
 
   test("empty edge list: empty labeling") {
     assert(star(Seq.empty).isEmpty)
@@ -59,7 +56,9 @@ class StarComponentsSpec extends AnyFunSuite with SharedSpark {
       val n = 60 + trial * 20
       val edges = Seq.fill(n * 2)(
         (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
-      assert(star(edges) == prop(edges), s"trial $trial disagreed")
+      val got = star(edges)
+      assert(got == minLabelComponents(edges), s"trial $trial disagreed")
+      assert(got == ufComponents(edges), s"trial $trial disagreed with union-find")
     }
   }
 
@@ -79,11 +78,12 @@ class StarComponentsSpec extends AnyFunSuite with SharedSpark {
 
   test("real dedup graph: both algorithms cluster the MinHash pairs identically") {
     val pairs = graft.queries.Similarity.minhashPairs(spark, sf, 0.5)
-      .select(org.apache.spark.sql.functions.col("doc_a").as("src"),
-        org.apache.spark.sql.functions.col("doc_b").as("dst"))
-      .localCheckpoint(true)
-    val s = StarComponents.connectedComponents(pairs).as[(Long, Long)].collect().toMap
-    val p = Components.connectedComponents(pairs).as[(Long, Long)].collect().toMap
-    assert(s.nonEmpty && s == p)
+      .select("doc_a", "doc_b").localCheckpoint(true)
+    val edges = pairs.as[(Long, Long)].collect().toSeq
+    val labels = StarComponents.connectedComponents(
+        pairs.toDF("src", "dst")).as[(Long, Long)].collect().toMap
+    assert(labels.nonEmpty, "fixture should contain near-dup pairs")
+    assert(labels == minLabelComponents(edges))
+    assert(labels == ufComponents(edges))
   }
 }

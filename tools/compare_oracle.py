@@ -3,13 +3,21 @@
 the Scala engine does not depend on this).
 
 Usage: python3 tools/compare_oracle.py [sfDir] [verifyOutDir]
+       python3 tools/compare_oracle.py --against otherVerifyDir verifyOutDir
 
 Runs every SQL in <verifyOutDir>/oracle_sql.json against DuckDB views over
 the sfDir parquet tables, loads the Spark result parquet the Verify main
 dumped, sorts columns by name (the driver's convention), and compares
 row count, column names, dtypes-ish, and values (floats with 1e-9 rel
 tolerance to allow for repr noise after the round(…,4) guard).
+
+--against compares two Verify dumps instead, query by query, as decoded
+tables (the same compare(), with <otherVerifyDir> in the oracle's place):
+the parquet files of one engine are not byte-stable between runs, their
+tables are. Covers every query either dump holds, oracle or not; prints
+one line per query and exits 1 on any mismatch or one-sided query.
 """
+import os
 import glob
 import json
 import math
@@ -67,7 +75,37 @@ def compare(name, odf, sdf, tol=None):
     return "OK"
 
 
+def read_dump(out, name):
+    """One query's dumped result as a frame, part files in name order
+    (the row order Verify wrote); None when the dump lacks the query."""
+    if not os.path.isdir(f"{out}/{name}"):
+        return None
+    files = sorted(glob.glob(f"{out}/{name}/*.parquet"))
+    if not files:
+        return pd.DataFrame()
+    return pd.concat([pd.read_parquet(f) for f in files])
+
+
+def main_against(ref, out):
+    names = sorted({d for base in (ref, out) for d in os.listdir(base)
+                    if os.path.isdir(f"{base}/{d}")})
+    print(f"# oracle= is {ref}, spark= is {out}")
+    n_ok = 0
+    for name in names:
+        rdf, sdf = read_dump(ref, name), read_dump(out, name)
+        if rdf is None or sdf is None:
+            r = f"MISSING in {ref if rdf is None else out}"
+        else:
+            r = compare(name, rdf, sdf)
+        n_ok += r == "OK"
+        print(f"{'PASS' if r == 'OK' else 'FAIL'} {name}: {r}")
+    print(f"\n{n_ok}/{len(names)} queries match")
+    sys.exit(0 if n_ok == len(names) else 1)
+
+
 def main():
+    if len(sys.argv) == 4 and sys.argv[1] == "--against":
+        main_against(sys.argv[2], sys.argv[3])
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     out = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
     con = duckdb.connect()
