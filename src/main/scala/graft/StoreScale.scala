@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   *  - '''probe''': a FIXED 8-doc batch committed against the 1-batch
   *    store and the 10-batch store, each COMPACTED first — 64 band
   *    hashes touch ≤ 64 of the 256 buckets (directory pruning) and the
-  *    OR-of-equals predicates push into the sorted bucket files
+  *    pushed `In` predicate reaches the sorted bucket files
   *    (row-group skipping). Flat probe time across the 10× store
   *    growth is the headline number; the uncompacted-pruned and
   *    full-read probes are reported for contrast.

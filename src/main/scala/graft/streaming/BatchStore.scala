@@ -1,8 +1,11 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{AnalysisException, DataFrame, SaveMode, SparkSession}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** The `batch_id=N` store protocol every incremental operator lands its
   * micro-batches through: one partition per micro-batch under `dir`,
@@ -19,10 +22,21 @@ import org.apache.spark.sql.functions.{col, lit}
   * attempt stages a complete tree under a fresh `__tmp`). Filesystem
   * calls go through the Hadoop FileSystem owning `dir`, so local disk,
   * HDFS and s3a URIs behave alike.
+  *
+  * Opening: every state-store read, here and in [[TieredStore]], goes
+  * through [[open]], which takes the schema Spark wrote into the
+  * store's own parquet footers instead of letting `spark.read.parquet`
+  * infer it. Inference is a one-task Spark job per read that re-learns
+  * that same footer schema; reading it on the driver starts no job, and
+  * since it comes from disk it survives a restart and follows any
+  * rewrite of the store.
   */
 object BatchStore {
 
   private val Prefix = "batch_id="
+
+  /** The footer key under which Spark records a file's row schema. */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
 
   private def fsOf(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
@@ -31,6 +45,53 @@ object BatchStore {
   private def batchDirs(fs: FileSystem, dir: Path): Seq[FileStatus] =
     try fs.listStatus(dir).toSeq.filter(_.getPath.getName.startsWith(Prefix))
     catch { case _: java.io.FileNotFoundException => Seq.empty }
+
+  /** One parquet data file in `dir` or at most `levels` partition
+    * directories below it (the stores use two: `batch_id=`, `sb=`).
+    * Names starting with `_` or `.` are skipped, as Spark skips them.
+    */
+  private def dataFile(fs: FileSystem, dir: Path, levels: Int): Option[Path] = {
+    val visible =
+      try fs.listStatus(dir).toSeq.filterNot { st =>
+        val n = st.getPath.getName
+        n.startsWith("_") || n.startsWith(".")
+      } catch { case _: java.io.FileNotFoundException => Seq.empty }
+    val (dirs, files) = visible.partition(_.isDirectory)
+    files.map(_.getPath).find(_.getName.endsWith(".parquet")).orElse(
+      if (levels == 0) None
+      else dirs.iterator.flatMap(d => dataFile(fs, d.getPath, levels - 1)).nextOption())
+  }
+
+  /** The store at `dir` as a frame, its partition columns discovered
+    * from the directory names — None when `dir` holds no data file
+    * (absent, or emptied by a compaction), without calling Spark. See
+    * the object doc: the data schema is the one Spark recorded in a
+    * data file's footer, the one its own inference would read with
+    * `mergeSchema` off. A file Spark did not write carries no such
+    * record and falls back to `spark.read.parquet`.
+    */
+  def open(spark: SparkSession, dir: String): Option[DataFrame] =
+    openPaths(spark, dir, Seq(dir))
+
+  /** [[open]] over partition directories `paths` of the store at `root`. */
+  private def openPaths(spark: SparkSession, root: String,
+      paths: Seq[String]): Option[DataFrame] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = new Path(root).getFileSystem(conf)
+    paths.iterator.flatMap(p => dataFile(fs, new Path(p), 2)).nextOption().map { f =>
+      val meta = {
+        val in = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+        try in.getFooter.getFileMetaData.getKeyValueMetaData
+        finally in.close()
+      }
+      val reader =
+        if (paths == Seq(root)) spark.read else spark.read.option("basePath", root)
+      Option(meta.get(SparkSchemaKey))
+        .map(s => reader.schema(DataType.fromJson(s).asInstanceOf[StructType]))
+        .getOrElse(reader)
+        .parquet(paths: _*)
+    }
+  }
 
   /** Path of batch `batchId`'s partition under `dir`. */
   def partition(dir: String, batchId: Long): String = s"$dir/$Prefix$batchId"
@@ -104,24 +165,19 @@ object BatchStore {
     * history silently. One `exists` probe on the hot path.
     */
   def read(spark: SparkSession, dir: String): Option[DataFrame] = {
-    def tryRead(d: String): Option[DataFrame] =
-      try Some(spark.read.parquet(d))
-      catch { case _: AnalysisException => None }
-    val committed = tryRead(dir)
+    val committed = open(spark, dir)
     val prev = new Path(dir + "__prev")
     val fs = fsOf(spark, dir)
     if (!fs.exists(prev)) committed
     else committed match {
-      case None => tryRead(prev.toString)
+      case None => open(spark, prev.toString)
       case Some(df) =>
         val have = batchDirs(fs, new Path(dir)).map(_.getPath.getName).toSet
         val missing = batchDirs(fs, prev).map(_.getPath)
-          .filterNot(q => have(q.getName))
-        if (missing.isEmpty) committed
-        else Some(df.unionByName(
-          spark.read.option("basePath", prev.toString)
-            .parquet(missing.map(_.toString): _*)
-            .select(df.columns.map(col).toSeq: _*)))
+          .filterNot(q => have(q.getName)).map(_.toString)
+        openPaths(spark, prev.toString, missing)
+          .map(m => df.unionByName(m.select(df.columns.map(col).toSeq: _*)))
+          .orElse(committed)
     }
   }
 
@@ -134,7 +190,7 @@ object BatchStore {
     * them. Publish is stage-then-swap with recovery first (see the
     * object doc). Offline step: run it between micro-batches or
     * snapshots, not concurrently with a commit. Returns false for an
-    * absent store.
+    * absent or empty store.
     */
   def compact(spark: SparkSession, dir: String, keys: Seq[String]): Boolean = {
     val p = new Path(dir)
@@ -142,9 +198,10 @@ object BatchStore {
     val tmp = new Path(dir + "__tmp")
     val fs = fsOf(spark, dir)
     recover(spark, dir)
-    val df =
-      try spark.read.parquet(dir)
-      catch { case _: AnalysisException => return false }
+    val df = open(spark, dir) match {
+      case Some(d) => d
+      case None => return false
+    }
     fs.delete(tmp, true) // stale staging from an earlier failed run
     df.repartition(col("batch_id")) // whole batches per task → 1 file/batch
       .sortWithinPartitions((col("batch_id") +: keys.map(col)): _*)

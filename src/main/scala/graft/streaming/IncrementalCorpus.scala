@@ -194,12 +194,16 @@ object IncrementalCorpus {
     // one materialization of the arriving docs: feeds the bench split,
     // the quality gate and, through q, every branch. q itself is
     // map-only over it, so each consumer re-derives it rather than
-    // paying a checkpoint job
-    val b = graft.Materialize.frame(batch)
+    // paying a checkpoint job. The checkpoint's own job also counts the
+    // batch's benchmark docs (an observed metric), so asking whether
+    // there are any costs no extra job
+    val isBench = col("doc_id") % 10 === 0 && col("doc_id") < benchMaxId
+    val observed = batch.observe("bench_delta", count(when(isBench, 1)))
+    val b = graft.Materialize.frame(observed)
     try {
-      val benchDelta = b.filter(col("doc_id") % 10 === 0 &&
-          col("doc_id") < benchMaxId)
-        .select(col("doc_id"), col("text"))
+      val hasBenchDelta =
+        observed.queryExecution.observedMetrics("bench_delta").getLong(0) > 0
+      val benchDelta = b.filter(isBench).select(col("doc_id"), col("text"))
       val q = CorpusPipeline.qualityFilter(b)
         .withColumn("digest", sha2(lower(trim(col("text"))), 256))
       concurrently(spark, Seq(
@@ -208,7 +212,8 @@ object IncrementalCorpus {
         () => StreamingDedup.commitBatch(q.drop("digest"), batchId,
           s"$base/store", s"$base/pairs", threshold, compactEvery = compactEvery),
         () => landHubEdges(spark, q, batchId, base, hubStore, compactEvery),
-        () => landFlags(spark, q, benchDelta, batchId, base, minOverlap)))
+        () => landFlags(spark, q, benchDelta, hasBenchDelta, batchId, base,
+          minOverlap)))
       BatchStore.land(q, batchId, s"$base/raw")
     } finally graft.Materialize.release(b)
   }
@@ -283,7 +288,8 @@ object IncrementalCorpus {
     * already-ingested docs vs the batch's NEW benchmark docs — so no
     * (doc, bench) pair is scored twice. Both run as ONE plan: the
     * corpus side is the batch tagged `is_new` plus, only when the
-    * batch adds benchmark docs, raw/'s earlier docs; the bench side is
+    * batch adds benchmark docs (`hasBenchDelta`, counted by
+    * [[ingestBatch]]'s checkpoint), raw/'s earlier docs; the bench side is
     * the persisted shingle store plus the batch's delta tagged
     * `is_delta`, broadcast; a shingle match counts when
     * `is_new || is_delta`. The doc's shingle count rides next to the
@@ -291,8 +297,8 @@ object IncrementalCorpus {
     * is [[Corpus.overlapping]], the one q_decontam applies.
     */
   private def landFlags(spark: SparkSession, q: DataFrame,
-      benchDelta: DataFrame, batchId: Long, base: String,
-      minOverlap: Double): Unit = {
+      benchDelta: DataFrame, hasBenchDelta: Boolean, batchId: Long,
+      base: String, minOverlap: Double): Unit = {
     // the bench side joins as the PERSISTED shingle store (see the state
     // layout note): only the delta is shingled from text here
     val benchShDelta = Similarity.shinglesOf(benchDelta)
@@ -305,17 +311,13 @@ object IncrementalCorpus {
     // the old-corpus rescreen is only owed when this batch actually adds
     // benchmark docs — without the guard every batch would re-shingle the
     // ENTIRE previously-ingested corpus (a full-corpus pass per batch at
-    // 100 TB) to join against an empty benchmark delta. The isEmpty probe
-    // is a limit-1 action on the already-checkpointed batch slice.
+    // 100 TB) to join against an empty benchmark delta.
     // (raw/ is read ONLY on this rare new-bench-docs path since round 14
     // — the per-batch exact-dup lookup reads hubs/ instead.)
     val newDocs = q.select(col("doc_id"), col("text"), lit(true).as("is_new"))
-    val corpus = readBefore(spark, s"$base/raw", batchId) match {
-      case Some(old) if !benchDelta.isEmpty =>
-        newDocs.unionByName(
-          old.select(col("doc_id"), col("text"), lit(false).as("is_new")))
-      case _ => newDocs
-    }
+    val old = if (hasBenchDelta) readBefore(spark, s"$base/raw", batchId) else None
+    val corpus = old.fold(newDocs)(o => newDocs.unionByName(
+      o.select(col("doc_id"), col("text"), lit(false).as("is_new"))))
     val flags = corpus
       .select(col("doc_id"), col("is_new"),
         graft.functions.TextExprs.tokenShingles(col("text"), 3).as("sh"))
@@ -378,7 +380,7 @@ object IncrementalCorpus {
   /** The current train-ready corpus: connected components over the
     * accumulated edge list (ids only — document text is read exactly
     * once, from raw/), drop non-minimum cluster members, benchmark docs,
-    * and flagged docs, then tag splits. Equals
+    * and flagged docs in one anti-join, then tag splits. Equals
     * `CorpusPipeline.buildFrame` over everything ingested so far.
     */
   def snapshot(spark: SparkSession, base: String): DataFrame = {
@@ -394,14 +396,13 @@ object IncrementalCorpus {
       .connectedComponents(pairs.unionByName(dedges), validate = false)
       .filter(col("id") =!= col("comp"))
       .select(col("id").as("doc_id"))
-    val benchIds = BatchStore.read(spark, s"$base/bench")
-      .map(_.select(col("doc_id"))).getOrElse(drop.limit(0))
-    val flagged = BatchStore.read(spark, s"$base/flags")
-      .map(_.select(col("doc_id"))).getOrElse(drop.limit(0))
-    CorpusPipeline.withSplit(
-      raw.join(drop, Seq("doc_id"), "left_anti")
-        .join(benchIds, Seq("doc_id"), "left_anti")
-        .join(flagged, Seq("doc_id"), "left_anti"))
+    // one anti-join against every excluded id: non-minimum cluster
+    // members, benchmark docs and flagged docs
+    val excluded = Seq("bench", "flags")
+      .flatMap(d => BatchStore.read(spark, s"$base/$d"))
+      .map(_.select(col("doc_id")))
+      .foldLeft(drop)(_ unionByName _)
+    CorpusPipeline.withSplit(raw.join(excluded, Seq("doc_id"), "left_anti"))
   }
 
   /** Offline state maintenance (round 15): compact every snapshot-side

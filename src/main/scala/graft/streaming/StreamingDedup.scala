@@ -39,8 +39,8 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType,
   * Each micro-batch's candidate read ([[readStorePruned]]) restricts
   * the bucketed tier to the sb partitions the batch's own band hashes
   * touch (DIRECTORY pruning — untouched buckets are never opened) and
-  * both tiers to rows matching the batch's band-hash set — as pushed
-  * OR-of-equals parquet predicates when the set is small (row-group
+  * both tiers to rows matching the batch's band-hash set — as one
+  * pushed `In` parquet predicate when the set is small (row-group
   * skipping on the sorted files) or a broadcast left-semi join when
   * large (no 40k-literal plan bloat; the join input still shrinks to
   * true candidates before the shuffle). The pruning is EXACTLY
@@ -114,8 +114,8 @@ object StreamingDedup {
   val StoreBuckets = 256
 
   /** Ceiling on the driver-collected band-hash probe used for the
-    * PUSHED OR-of-equals form (row-group skipping needs source-
-    * translatable predicates; a giant literal chain would bloat the
+    * PUSHED `In` form (row-group skipping needs source-
+    * translatable predicates; a giant literal set would bloat the
     * plan instead). Batches past it — ≥ ~128 docs — prune via the
     * broadcast left-semi join, which never collects hashes at all.
     */
@@ -211,7 +211,7 @@ object StreamingDedup {
     * possibly pair with — see the class doc for why this is lossless.
     * The bucketed tier additionally prunes to the touched sb
     * partitions (directory-level); both tiers prune rows to the
-    * batch's band-hash set, as pushed OR-of-equals predicates when the
+    * batch's band-hash set, as one pushed `In` predicate when the
     * probe is ≤ [[PushdownHashLimit]] hashes (parquet row-group
     * skipping on the sorted files) or a broadcast left-semi join
     * otherwise (no literal-bloated plan; the driver never collects an

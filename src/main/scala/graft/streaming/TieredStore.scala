@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{AnalysisException, Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** A keyed two-tier (LSM-shaped) parquet store for streaming state —
@@ -31,11 +31,15 @@ import org.apache.spark.sql.functions._
   * compaction are garbage, not data). [[readPruned]] additionally
   * restricts the bucketed tier to the sb partitions the probe's keys
   * touch (DIRECTORY pruning) and both tiers to rows matching the
-  * probe's key set — pushed OR-of-equals parquet predicates when the
-  * probe is ≤ `pushdownLimit` distinct keys (row-group skipping on the
-  * key-sorted files) or a broadcast left-semi join otherwise (no
-  * literal-bloated plan; nothing unbounded ever collects to the
-  * driver). Key-equality pruning is exactly lossless for any consumer
+  * probe's key set — one pushed `In` parquet predicate when the probe
+  * is ≤ `pushdownLimit` distinct keys (row-group skipping on the
+  * key-sorted files; above 10 values Catalyst plans it as `InSet`,
+  * whose generated code references the value set instead of inlining
+  * it, so a batch's keys never become new code) or a broadcast
+  * left-semi join otherwise (nothing unbounded ever collects to the
+  * driver). Both tiers open through [[BatchStore.open]], with the
+  * schema recorded in their own footers — no read starts a job.
+  * Key-equality pruning is exactly lossless for any consumer
   * that only ever equi-joins the store on `keyCol` against the probe's
   * rows — a store row whose key the probe lacks cannot match anything
   * (TieredStorePropSpec proves pruned ≡ full ∩ probe over generated
@@ -91,8 +95,7 @@ import org.apache.spark.sql.functions._
   *                      effective count is chosen per compaction
   * @param bucketOfValueM driver-side twin of `bucketExprM` over a
   *                      collected key value
-  * @param pushdownLimit probe-size ceiling for the pushed
-  *                      OR-of-equals form
+  * @param pushdownLimit probe-size ceiling for the pushed `In` form
   * @param label         store name used in error messages
   * @param targetBucketBytes bytes of tier data per bucket directory a
   *                      compaction aims for — the effective count is
@@ -202,11 +205,19 @@ final class TieredStore(
   def append(df: DataFrame, batchId: Long): Unit =
     BatchStore.land(df.sortWithinPartitions(col(keyCol)), batchId, storeDir)
 
+  /** The bucketed tier's `batch_id < beforeBatch` restriction, left out
+    * when the watermark `w` already implies it: every row of that tier
+    * has `batch_id ≤ w`, and a filter that is always true would only add
+    * a per-batch literal to the plan.
+    */
+  private def bucketedBefore(w: Long, beforeBatch: Long)(tier: DataFrame): DataFrame =
+    if (w < beforeBatch) tier else tier.filter(col("batch_id") < beforeBatch)
+
   /** The accumulated store (both tiers) restricted to batches strictly
     * before `beforeBatch` — so a replayed batch sees the identical
     * store prefix even when its own rows already landed before the
-    * crash. Resolved by attempting the read and treating a missing
-    * path as "no store yet": works identically for local disk, HDFS,
+    * crash. A tier with no data file reads as "no store yet"
+    * ([[BatchStore.open]]): works identically for local disk, HDFS,
     * and s3a URIs. Append tier restricted to batches ABOVE the
     * watermark: dirs a replay recreated after compaction are garbage,
     * not data.
@@ -217,16 +228,11 @@ final class TieredStore(
     val fs = fsOf(spark)
     val bucketed: Option[DataFrame] =
       if (w < 0) None
-      else resolvedBucketedDir(fs).flatMap { dir =>
-        try Some(spark.read.parquet(dir)
-          .filter(col("batch_id") < beforeBatch).select(cols: _*))
-        catch { case _: AnalysisException => None }
-      }
-    val fresh: Option[DataFrame] =
-      try Some(spark.read.parquet(storeDir)
-        .filter(col("batch_id") > w && col("batch_id") < beforeBatch)
+      else resolvedBucketedDir(fs).flatMap(BatchStore.open(spark, _))
+        .map(bucketedBefore(w, beforeBatch)(_).select(cols: _*))
+    val fresh: Option[DataFrame] = BatchStore.open(spark, storeDir)
+      .map(_.filter(col("batch_id") > w && col("batch_id") < beforeBatch)
         .select(cols: _*))
-      catch { case _: AnalysisException => None }
     (bucketed, fresh) match {
       case (Some(b), Some(f)) => Some(b.unionByName(f))
       case (b, f) => b.orElse(f)
@@ -243,19 +249,10 @@ final class TieredStore(
     val probed = distinctKeys.limit(pushdownLimit + 1)
       .collect().map(_.get(0))
     val small = probed.length <= pushdownLimit
-    // BALANCED or-tree (depth log n): the left-deep reduce(_ || _)
-    // form recursed Catalyst's tree walks to a StackOverflow at
-    // ~1000 terms
-    def balancedOr(preds: IndexedSeq[Column]): Column =
-      if (preds.length == 1) preds.head
-      else {
-        val (l, r) = preds.splitAt(preds.length / 2)
-        balancedOr(l) || balancedOr(r)
-      }
     def keyPrune(df: DataFrame): DataFrame =
       if (small) {
         if (probed.isEmpty) df.limit(0) // empty probe matches nothing
-        else df.filter(balancedOr(probed.toIndexedSeq.map(v => col(keyCol) === lit(v))))
+        else df.filter(col(keyCol).isin(probed.toIndexedSeq: _*))
       } else df.join(broadcast(distinctKeys), Seq(keyCol), "left_semi")
     val cols = dataCols.map(col)
     val fs = fsOf(spark)
@@ -263,7 +260,7 @@ final class TieredStore(
     val bucketed: Option[DataFrame] =
       if (w < 0) None
       else resolvedBucketedDir(fs).flatMap { dir =>
-        try {
+        BatchStore.open(spark, dir).map { tier =>
           // bucket derivation MUST use the count the tier was written
           // with, not the ceiling — a compaction may have chosen fewer
           val m = recordedBucketsOf(fs, dir)
@@ -272,19 +269,18 @@ final class TieredStore(
             else probe
               .select(bucketExprM(col(keyCol), m).as("sb"))
               .distinct().collect().map(_.getInt(0)) // bounded ≤ m
-          Some(keyPrune(spark.read.parquet(dir)
-            .filter(col("sb").isin(sbs.map(Integer.valueOf).toSeq: _*) &&
-              col("batch_id") < beforeBatch))
-            .select(cols: _*))
-        } catch { case _: AnalysisException => None }
+          keyPrune(bucketedBefore(w, beforeBatch)(
+            tier.filter(col("sb").isin(sbs.map(Integer.valueOf).toSeq: _*))))
+            .select(cols: _*)
+        }
       }
-    val fresh: Option[DataFrame] =
-      try Some(keyPrune(spark.read.parquet(storeDir)
+    val fresh: Option[DataFrame] = BatchStore.open(spark, storeDir).map { tier =>
+      keyPrune(tier
         // > w: batches ≤ w live in the bucketed tier; append-tier dirs
         // a replay recreated after compaction are garbage, not data
         .filter(col("batch_id") > w && col("batch_id") < beforeBatch))
-        .select(cols: _*))
-      catch { case _: AnalysisException => None }
+        .select(cols: _*)
+    }
     (bucketed, fresh) match {
       case (Some(b), Some(f)) => Some(b.unionByName(f))
       case (b, f) => b.orElse(f)
@@ -341,13 +337,10 @@ final class TieredStore(
     val cols = (dataCols :+ "batch_id").map(col)
     val oldTier: Option[DataFrame] =
       if (w < 0) None
-      else try Some(spark.read.parquet(bucketed.toString).select(cols: _*))
-      catch { case _: AnalysisException => None }
-    val freshRows: Option[DataFrame] =
-      try Some(spark.read.parquet(storeDir)
-        .filter(col("batch_id") > w && col("batch_id") <= upTo)
+      else BatchStore.open(spark, bucketed.toString).map(_.select(cols: _*))
+    val freshRows: Option[DataFrame] = BatchStore.open(spark, storeDir)
+      .map(_.filter(col("batch_id") > w && col("batch_id") <= upTo)
         .select(cols: _*))
-      catch { case _: AnalysisException => None }
     if (oldTier.isEmpty && freshRows.isEmpty) return // nothing to compact
     val all = (oldTier, freshRows) match {
       case (Some(o), Some(f)) => o.unionByName(f)

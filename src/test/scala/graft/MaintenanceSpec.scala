@@ -254,4 +254,69 @@ class MaintenanceSpec extends AnyFunSuite with SharedSpark {
     assert(IncrementalSubstr.snapshot(spark, s"$tmp/sub")
       .collect().map(_.toString).sorted.toSeq == subBefore)
   }
+
+  /** Schema and rows of a frame, rows as sorted strings. */
+  private def contents(df: org.apache.spark.sql.DataFrame) =
+    (df.schema, df.collect().map(_.toString).sorted.toSeq)
+
+  test("store open: the footer schema reads every corpus store as inference does") {
+    import graft.streaming.IncrementalCorpus
+    val base = Files.createTempDirectory("graft_open_parity").toString
+    val docs = Tables.documents(spark, sf)
+    // the last batch redelivers texts of the first under new ids, so
+    // dedges/ holds exact-dup edges
+    val batches = (0 until 3).map(i => docs.filter(col("doc_id") % 3 === i)) :+
+      docs.filter(col("doc_id") < 60).withColumn("doc_id", col("doc_id") + 1000000L)
+    batches.zipWithIndex.foreach { case (b, i) =>
+      IncrementalCorpus.ingestBatch(b, i.toLong, base)
+    }
+    IncrementalCorpus.maintain(spark, base)
+    // six batch stores and the two tiered stores' compacted tiers hold
+    // data; maintain emptied the tiered stores' append tiers
+    val withData = Seq("raw", "bench", "benchsh", "pairs", "dedges", "flags",
+      "hubs_bucketed", "store_bucketed")
+    withData.foreach { d =>
+      val got = BatchStore.open(spark, s"$base/$d")
+      assert(got.isDefined, s"$d: no data file found")
+      assert(contents(got.get) == contents(spark.read.parquet(s"$base/$d")),
+        s"$d: footer-schema open differs from an inferred read")
+    }
+    Seq("hubs", "store").foreach { d =>
+      assert(BatchStore.open(spark, s"$base/$d").isEmpty, s"$d: emptied tier opened")
+    }
+    assert(BatchStore.open(spark, s"$base/never_written").isEmpty)
+    // the compaction crash window: only raw__prev survives
+    val fs = new org.apache.hadoop.fs.Path(base)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    val want = contents(spark.read.parquet(s"$base/raw"))
+    assert(fs.rename(new org.apache.hadoop.fs.Path(s"$base/raw"),
+      new org.apache.hadoop.fs.Path(s"$base/raw__prev")))
+    assert(contents(BatchStore.read(spark, s"$base/raw").get) == want,
+      "the __prev window must read as the committed store did")
+  }
+
+  test("store open: a file Spark did not write reads through inference") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    import org.apache.parquet.schema.MessageTypeParser
+    val dir = Files.createTempDirectory("graft_open_foreign").toString
+    val conf = spark.sessionState.newHadoopConf()
+    val schema = MessageTypeParser.parseMessageType(
+      "message m { required int64 k; required binary s (UTF8); }")
+    val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(
+        new Path(s"$dir/batch_id=3/part-0.parquet"), conf))
+      .withType(schema).withConf(conf).build()
+    try {
+      val g = new SimpleGroupFactory(schema)
+      w.write(g.newGroup().append("k", 1L).append("s", "a"))
+      w.write(g.newGroup().append("k", 2L).append("s", "b"))
+    } finally w.close()
+    val got = BatchStore.open(spark, dir)
+    assert(got.isDefined)
+    assert(contents(got.get) == contents(spark.read.parquet(dir)))
+    assert(got.get.select("k", "s", "batch_id").collect().map(_.toString).sorted.toSeq ==
+      Seq("[1,a,3]", "[2,b,3]"))
+  }
 }
