@@ -59,8 +59,7 @@ private[graft] object BatchFingerprint {
     */
   def committed(spark: SparkSession, path: String,
       batchId: Long): Option[(Long, Long)] =
-    (try Some(spark.read.parquet(dir(path)))
-     catch { case _: org.apache.spark.sql.AnalysisException => None })
+    graft.streaming.BatchStore.open(spark, dir(path))
       .flatMap(_.filter(col("batch_id") === batchId)
         .select(col("n"), col("fp"))
         .collect().headOption // bounded: one row per batch_id

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -121,9 +121,10 @@ object PrismaConnector {
     * `inventoryPayload`, when given, supplies the report-wide
     * `timestamp`/`requestedTimestamp` columns the reference's
     * Alert_Report.csv carries (lambda.py sets them from the inventory
-    * response) — data-derived like the B2 fix, joined as a broadcast
-    * 1-row aggregate, never wall clock. Omitted → columns absent
-    * (schema-narrowing deviation for callers with no inventory feed).
+    * response) — data-derived like the B2 fix, read on the driver by
+    * [[inventoryStamps]] and attached as literals, never wall clock.
+    * Omitted → columns absent (schema-narrowing deviation for callers
+    * with no inventory feed).
     */
   def alertReport(spark: SparkSession, policyPayload: DataFrame,
       alertPages: DataFrame, inventoryPayload: Option[DataFrame] = None): DataFrame = {
@@ -162,18 +163,46 @@ object PrismaConnector {
         col("accountGroup").as("Cloud Account Group"),
         lit("fail").as("Status"),
         col("failedCount").as("Failed Resource Count"))
-    inventoryPayload.fold(report) { inv =>
-      val ts = inv
-        .select(from_json(col("json"), inventorySchema()).as("p"))
-        .agg(min(col("p.timestamp")).as("ts_ms"),
-          min(col("p.requestedTimestamp")).as("req_ms"))
-      report.join(broadcast(ts)) // 1-row broadcast, no shuffle of the report
-        .withColumn("timestamp", date_format(timestamp_millis(col("ts_ms")), TsFmt))
-        .withColumn("requestedTimestamp",
-          date_format(timestamp_millis(col("req_ms")), TsFmt))
-        .drop("ts_ms", "req_ms")
-    }
+    inventoryPayload.fold(report)(inv => stamped(report, inventoryStamps(inv)))
   }
+
+  /** What the inventory feed stamps on the reports, None where no
+    * payload carries one:
+    *   - `anchor`: the earliest `yyyy-MM-dd` of `timestamp` over the
+    *     payloads that yield inventory rows (an empty or missing
+    *     `groupedAggregates` list explodes to none, so it never anchors);
+    *   - `ts`/`req`: the formatted `timestamp`/`requestedTimestamp` of
+    *     the payload with the smallest of each, over every payload.
+    */
+  private final case class InventoryStamps(anchor: Option[String],
+      ts: Option[String], req: Option[String])
+
+  /** [[InventoryStamps]] from one projection collected to the driver
+    * (one API response per row, so bounded; over a local frame it folds
+    * on the driver and starts no job). Spark evaluates every expression,
+    * so parsing and formatting (session time zone) are the reports' own;
+    * the driver only picks the minima.
+    */
+  private def inventoryStamps(inventoryPayload: DataFrame): InventoryStamps = {
+    val p = from_json(col("json"), inventorySchema())
+    val (ts, req) = (p.getField("timestamp"), p.getField("requestedTimestamp"))
+    def fmt(c: Column, f: String) = date_format(timestamp_millis(c), f)
+    val rows = inventoryPayload
+      .select(ts, fmt(ts, TsFmt), req, fmt(req, TsFmt),
+        when(size(p.getField("groupedAggregates")) > 0, fmt(ts, "yyyy-MM-dd")))
+      .collect()
+    def earliest(ms: Int): Option[String] =
+      rows.filterNot(_.isNullAt(ms)).minByOption(_.getLong(ms)).map(_.getString(ms + 1))
+    InventoryStamps(rows.flatMap(r => Option(r.getString(4))).minOption,
+      earliest(0), earliest(2))
+  }
+
+  /** `report` with the inventory's `timestamp`/`requestedTimestamp`
+    * appended as string literals (null where the feed has none).
+    */
+  private def stamped(report: DataFrame, s: InventoryStamps): DataFrame =
+    report.withColumn("timestamp", lit(s.ts.orNull).cast(StringType))
+      .withColumn("requestedTimestamp", lit(s.req.orNull).cast(StringType))
 
   /** The QUOTE_NONNUMERIC row renderer: one map-only projection to
     * (value, part). The reference renders `transaction_date` as a
@@ -227,12 +256,12 @@ object PrismaConnector {
     * (date, report) pins ONE file per date and report (the reference's
     * one-object-per-day contract).
     *
-    * One publish is three Spark actions, whatever the report count: the
+    * One publish is two Spark actions, whatever the report count: the
     * rendered rows of every report, tagged with the report's index, are
-    * materialized once; one grouped collect over them yields each
-    * report's bad-date count and the date universe together; one write
-    * stages every file. Without the materialization each action would
-    * re-run every report's plan.
+    * materialized once, and the date check rides on that job as an
+    * `observe` metric (each report's bad-date count and the date
+    * universe together); one write stages every file. Without the
+    * materialization the write would re-run every report's plan.
     *
     * The rollback is structural instead of compensating: all reports
     * stage into ONE sibling tree first, and only after the Spark write
@@ -285,25 +314,28 @@ object PrismaConnector {
     // header and rows. The report index, not the file name, keys the
     // staging tree: a name is never escaped into a path.
     val idx = "report"
-    val rendered = graft.Materialize.frame(reports.zipWithIndex
+    // Fail BEFORE any IO on dates the folder key can't express: a null
+    // (hive would write __HIVE_DEFAULT_PARTITION__) or non-ISO value
+    // has no {yyyy}/{MonthName}/{d} rendering. The check is an observed
+    // metric of the materialization itself: the set of good dates and
+    // each report's bad-row count, bounded by dates + reports, with no
+    // data row parsed on the driver. try_to_date, not to_date: under
+    // Spark 4's default ANSI mode to_date THROWS CANNOT_PARSE on a
+    // malformed string mid-aggregate; try_to_date yields null so
+    // malformed rows are COUNTED and reported through the same clear
+    // require message as nulls.
+    val good = try_to_date(col(part), "yyyy-MM-dd").isNotNull
+    val checked = reports.zipWithIndex
       .map { case ((out, _), i) => renderQuoteNonNumeric(out, part).withColumn(idx, lit(i)) }
-      .reduce(_ unionByName _))
+      .reduce(_ unionByName _)
+      .observe("literal_dates", collect_set(when(good, col(part))),
+        reports.indices.map(i => count(when(col(idx) === i && !good, 1))): _*)
+    val rendered = graft.Materialize.frame(checked)
     var hadPrev = false
     try {
-      // Fail BEFORE any IO on dates the folder key can't express: a null
-      // (hive would write __HIVE_DEFAULT_PARTITION__) or non-ISO value
-      // has no {yyyy}/{MonthName}/{d} rendering. Every bad value groups
-      // under a null date, so the collect is bounded by dates × reports
-      // and no data row is parsed on the driver. try_to_date, not
-      // to_date: under Spark 4's default ANSI mode to_date THROWS
-      // CANNOT_PARSE on a malformed string mid-aggregate; try_to_date
-      // yields null so malformed rows are COUNTED and reported through
-      // the same clear require message as nulls.
-      val groups = rendered
-        .groupBy(col(idx), when(try_to_date(col(part), "yyyy-MM-dd").isNotNull, col(part)))
-        .count().collect()
+      val observed = checked.queryExecution.observedMetrics("literal_dates")
       reports.zipWithIndex.foreach { case ((_, name), i) =>
-        val bad = groups.filter(g => g.getInt(0) == i && g.isNullAt(1)).map(_.getLong(2)).sum
+        val bad = observed.getLong(1 + i)
         require(bad == 0,
           s"literal layout requires non-null yyyy-MM-dd $part values; $bad rows of " +
             s"'$name' violate")
@@ -314,7 +346,7 @@ object PrismaConnector {
       // ALL the declared file names — a report with no rows on some date
       // (or no rows at all) publishes a header-only CSV there instead of
       // silently missing under a fresh _SUCCESS.
-      val allDates = groups.map(_.getString(1)).distinct.toSeq
+      val allDates = observed.getSeq[String](0)
       require(allDates.nonEmpty,
         s"every report is empty — no $part anywhere to anchor the literal " +
           "date-folder layout (the reference would stamp wall clock; here dates " +
@@ -400,25 +432,26 @@ object PrismaConnector {
     // anchor for all three reports — the resource-type fan-out payloads
     // are fetched moments after the inventory and could carry a
     // different calendar date at a midnight boundary, which would split
-    // the three-files-per-folder contract across two folders. A 1-row
-    // broadcast attach pins them; reruns of old payloads republish the
-    // same tree instead of today's.
-    val inv = inventoryReport(spark, inventoryPayload)
-    val anchor = inv.agg(min(col("transaction_date")).as("__anchor"))
+    // the three-files-per-folder contract across two folders. The anchor
+    // is the earliest date of the inventory report's rows, read on the
+    // driver with the alert stamps ([[inventoryStamps]]) and attached as
+    // a literal that pins them; reruns of old payloads republish the
+    // same tree instead of today's. No anchor (no dated inventory row)
+    // pins a null date, which the writer's date guard refuses.
+    val stamps = inventoryStamps(inventoryPayload)
     def pinned(df: DataFrame): DataFrame =
-      df.join(broadcast(anchor))
-        .withColumn("transaction_date", col("__anchor")).drop("__anchor")
+      df.withColumn("transaction_date", lit(stamps.anchor.orNull).cast(StringType))
     // pinned() covers the INVENTORY report too (round-14 review): at a
     // midnight boundary the inventory payload itself can carry rows on
     // two calendar dates, which would split Inventory_Report.csv across
-    // two date folders while the two reports pinned to min(inv) land in
-    // one — breaking the three-files-per-folder contract the anchor
+    // two date folders while the two reports pinned to the anchor land
+    // in one — breaking the three-files-per-folder contract the anchor
     // exists to protect.
     writeReportsLiteralLayout(Seq(
-      pinned(inv) -> "Inventory_Report",
+      pinned(inventoryReport(spark, inventoryPayload)) -> "Inventory_Report",
       pinned(resourceTypeReport(spark, resourceTypePayloads)) ->
         "Inventory_Resource_Type_Report",
-      pinned(alertReport(spark, policyPayload, alertPages,
-        Some(inventoryPayload))) -> "Alert_Report"), path)
+      pinned(stamped(alertReport(spark, policyPayload, alertPages), stamps)) ->
+        "Alert_Report"), path)
   }
 }

@@ -22,7 +22,9 @@ object StreamFixture {
     val tmp = Files.createTempDirectory("graft_stream_fixture")
     try {
       input.repartition(nFiles).write.parquet(s"$tmp/in")
-      val schema = spark.read.parquet(s"$tmp/in").schema
+      // the schema Spark wrote into the files' footers: no inference job
+      val schema = BatchStore.open(spark, s"$tmp/in")
+        .getOrElse(throw new IllegalStateException(s"no input landed in $tmp/in")).schema
       val q = StreamingDedup.docsStream(spark, s"$tmp/in", schema)
         .writeStream
         .option("checkpointLocation", s"$tmp/ck")

@@ -562,4 +562,70 @@ class ConnectorSpec extends AnyFunSuite with SharedSpark {
     assert(invLines.tail.forall(_.endsWith("\"2024-04-07\"")),
       s"inventory cells must carry the anchor date: $invLines")
   }
+
+  /** The composed flow's fixed side inputs: one resource-type payload,
+    * one policy, one alert page.
+    */
+  private def publishWith(inventory: org.apache.spark.sql.DataFrame, dir: String): Unit = {
+    val rtPayload =
+      """{"timestamp": 1712500000000, "requestedTimestamp": 1712500000000,
+        | "groupedAggregates": [
+        |  {"resourceTypeName": "EC2 Instance", "failedResources": 1,
+        |   "passedResources": 2, "totalResources": 3}]}"""
+        .stripMargin.replace("\n", " ")
+    val policies =
+      """{"policies": [
+        | {"policyId": "p1", "policyName": "Public bucket", "policyType": "config",
+        |  "severity": "high", "alertCount": 3}]}""".stripMargin.replace("\n", " ")
+    val pages = Seq(
+      """{"policyId": "p1", "items": [{"id": "a1", "resource": {"account": "prod",
+        | "accountId": "111", "cloudType": "aws",
+        | "cloudAccountGroups": ["g1"]}}]}""".stripMargin.replace("\n", " "))
+      .toDF("json")
+    PrismaConnector.runReportPipelineLiteral(spark, inventory,
+      Seq(("Amazon EC2", rtPayload)).toDF("service", "json"),
+      Seq(policies).toDF("json"), pages, dir)
+  }
+
+  test("composed R25 flow: an inventory payload with no aggregates never anchors the date, but stamps the alert timestamps") {
+    val dir = Files.createTempDirectory("graft_report_anchor").toString
+    // the earlier payload (2024-04-06 10:40:00 UTC) lists no aggregates,
+    // so it adds no inventory row and cannot anchor the folder; the
+    // alert stamps are the minima over every payload, each on its own
+    def inv(tsMs: Long, reqMs: Long, aggregates: String) =
+      s"""{"timestamp": $tsMs, "requestedTimestamp": $reqMs,
+         | "groupedAggregates": [$aggregates]}""".stripMargin.replace("\n", " ")
+    publishWith(Seq(
+      inv(1712400000000L, 1712600000000L, ""),
+      inv(1712500000000L, 1712450000000L,
+        """{"serviceName": "Amazon EC2", "failedResources": 1,
+          | "passedResources": 2, "totalResources": 3}""".stripMargin.replace("\n", " ")))
+      .toDF("json"), dir)
+    assert(!new java.io.File(s"$dir/2024/April/6-April-2024").exists(),
+      "a payload without inventory rows must not anchor the date folder")
+    val folder = s"$dir/2024/April/7-April-2024"
+    val invLines = scala.io.Source.fromFile(s"$folder/Inventory_Report.csv").getLines().toList
+    assert(invLines.length == 2 && invLines(1).endsWith("\"2024-04-07\""), invLines.toString)
+    val alertLines = scala.io.Source.fromFile(s"$folder/Alert_Report.csv").getLines().toList
+    assert(alertLines.head.endsWith("\"timestamp\",\"requestedTimestamp\",\"transaction_date\""),
+      alertLines.head)
+    // timestamp from the earlier payload, requestedTimestamp from the
+    // other one, the date from the anchor
+    assert(alertLines.length == 2 && alertLines(1).endsWith(
+      "\"2024-04-06 10:40:00\",\"2024-04-07 00:33:20\",\"2024-04-07\""), alertLines.toString)
+  }
+
+  test("composed R25 flow: an inventory payload read from a file publishes the same tree as a local frame") {
+    val parent = Files.createTempDirectory("graft_report_file_inv")
+    val json = parent.resolve("inventory.json")
+    Files.write(json, (invPayload + "\n").getBytes("UTF-8"))
+    val local = parent.resolve("local").toString
+    val fromFile = parent.resolve("file").toString
+    publishWith(Seq(invPayload).toDF("json"), local)
+    publishWith(spark.read.text(json.toString).toDF("json"), fromFile)
+    def visible(dir: String) = tree(dir).filter { case (p, _) => !p.endsWith(".crc") }
+    assert(visible(local).keySet.contains("2024/April/7-April-2024/Alert_Report.csv"))
+    assert(visible(fromFile) == visible(local),
+      s"trees differ: ${visible(fromFile).keySet} vs ${visible(local).keySet}")
+  }
 }

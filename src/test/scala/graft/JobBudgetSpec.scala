@@ -3,29 +3,35 @@ package graft
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
+import graft.sources.PrismaConnector
+import graft.sources.ReportPipeline.Fixtures
 import graft.streaming.{BatchStore, IncrementalCorpus}
 import org.apache.spark.ListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Spark job budgets of the incremental corpus on a fixed fixture. The
-  * micro-batch path is bound by job count, not by data, so each ceiling
-  * is the count measured when it was pinned: a change that adds a job
-  * fails here, and a change that earns a lower count lowers its ceiling.
+/** Spark job budgets of the incremental corpus and of the three-report
+  * publish on fixed fixtures. Both paths are bound by job count, not by
+  * data, so each ceiling is the count measured when it was pinned: a
+  * change that adds a job fails here, and a change that earns a lower
+  * count lowers its ceiling.
   *
   * The batches have perfbench `corpus_stream`'s shape: 50 documents
   * under new sequential ids, from the second batch on 10 of them texts
   * seen before. The state is warm, as in a running stream: two batches,
   * a `maintain` and a snapshot before anything is counted. The tests run
   * in order on that one state: a batch, then `maintain`, then a
-  * snapshot.
+  * snapshot. The publish has its own state: a report root that three
+  * publishes of `ReportPipeline.Fixtures` have written before the
+  * fourth is counted.
   */
 class JobBudgetSpec extends AnyFunSuite with SharedSpark {
 
   private val IngestCeiling = 27
   private val MaintainCeiling = 16
   private val SnapshotCeiling = 10
+  private val PublishCeiling = 5
 
   /** Jobs started by `body`, on this thread or on threads it starts
     * (they inherit the tag; IncrementalCorpusConcurrencySpec pins that).
@@ -117,5 +123,17 @@ class JobBudgetSpec extends AnyFunSuite with SharedSpark {
       val n = jobsOf(open())
       assert(n == 0, s"opening the $what store ran $n jobs")
     }
+  }
+
+  test("a warm three-report publish stays within its job ceiling") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_job_budget_publish").resolve("reports").toString
+    def publish(): Unit = PrismaConnector.runReportPipelineLiteral(spark,
+      Fixtures.inventory.toDF("json"), Fixtures.resourceType.toDF("service", "json"),
+      Fixtures.policies.toDF("json"), Fixtures.alertPages.toDF("json"), root)
+    (1 to 3).foreach(_ => publish())
+    val n = jobsOf(publish())
+    info(s"publish: $n jobs")
+    assert(n <= PublishCeiling, s"a warm publish ran $n jobs (ceiling $PublishCeiling)")
   }
 }

@@ -47,7 +47,7 @@ class TieredStoreSpec extends AnyFunSuite with SharedSpark {
     // this covers the space: random rows with colliding keys across
     // batches, random partial compaction points (watermark anywhere in
     // the landed range, including mid-history), probe sizes straddling
-    // the pushdown limit (≤8 → pushed OR-of-equals literals; >8 →
+    // the pushdown limit (≤8 → a pushed `In` of literals; >8 →
     // broadcast left-semi), and read frontiers both behind and at the
     // head — every combination must return exactly the ledger's rows
     // with key ∈ probe and batch < frontier, as a multiset.
